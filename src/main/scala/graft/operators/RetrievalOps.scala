@@ -860,18 +860,18 @@ object RetrievalOps {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
       val name = "graft_ivf_ingest_" +
         java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = assigned.writeStream.trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          s"${graft.BenchEnv.localDir}/graft_ckpt_$name")
-        .foreachBatch { (b: DataFrame, bid: Long) =>
-          val rows = b.groupBy(col("g")).agg(count(lit(1)).as("n")).collect()
-          buf.synchronized {
-            buf ++= rows.map(r =>
-              (bid, r.getAs[Long]("g"), r.getAs[Long]("n")))
-          }: Unit
-        }
-        .start()
-      q.awaitTermination()
+      graft.streaming.StreamingOps.withDrainCheckpoint(name) { ckpt =>
+        assigned.writeStream.trigger(Trigger.AvailableNow()).queryName(name)
+          .option("checkpointLocation", ckpt)
+          .foreachBatch { (b: DataFrame, bid: Long) =>
+            val rows = b.groupBy(col("g")).agg(count(lit(1)).as("n")).collect()
+            buf.synchronized {
+              buf ++= rows.map(r =>
+                (bid, r.getAs[Long]("g"), r.getAs[Long]("n")))
+            }: Unit
+          }
+          .start().awaitTermination()
+      }
       val bn = buf.groupBy(_._1).map { case (bid, rs) => bid -> rs.map(_._3).sum }
       val out = buf.toSeq.map { case (bid, g, n) =>
         (bid + 1L, g, n, n * 1000000L / bn(bid))

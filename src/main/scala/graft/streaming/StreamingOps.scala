@@ -166,6 +166,18 @@ object StreamingOps {
                     parts: Int = 4): DataFrame =
     drainWithHandle(s, df, mode, parts)._1
 
+  /** Runs a one-shot drain against the checkpoint directory
+    * `graft_ckpt_<name>` under [[graft.BenchEnv.localDir]], then deletes
+    * that directory. The drain has terminated when `run` returns, and
+    * what callers read afterwards (the memory sink, `recentProgress`)
+    * lives in memory, so a kept directory only leaks: one per drain,
+    * outside any run's own output. */
+  private[graft] def withDrainCheckpoint[T](name: String)(run: String => T): T = {
+    val dir = new java.io.File(s"${graft.BenchEnv.localDir}/graft_ckpt_$name")
+    try run(dir.getPath)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit
+  }
+
   /** drain + the finished StreamingQuery handle — for the monitor
     * queries that read the engine's own progress objects
     * (recentProgress) rather than the sink table. One copy of the
@@ -198,7 +210,7 @@ object StreamingOps {
     val effParts = s.conf.getOption("spark.graft.streaming.drainParts")
       .map(_.toInt).getOrElse(parts)
     s.conf.set("spark.sql.shuffle.partitions", effParts.toString)
-    try {
+    try withDrainCheckpoint(name) { ckpt =>
     val q = df.writeStream
       .outputMode(mode).format("memory").queryName(name)
       // state-store + offset-log commits fsync per partition per batch;
@@ -206,8 +218,7 @@ object StreamingOps {
       // FloorProbe measured for shuffle files (BENCH_NOTES r5), so the
       // checkpoint goes on the same fast local dir the shuffle uses.
       // One-shot oracle drains never restart, so durability is moot.
-      .option("checkpointLocation",
-        s"${graft.BenchEnv.localDir}/graft_ckpt_$name")
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     (s.table(name), q)

@@ -170,6 +170,34 @@ class StreamingOpsSpec extends SparkSpec {
     assert(stats.exists(r => r.getLong(0) == 3L && r.getLong(1) == 1L), stats)
   }
 
+  test("drains delete their graft_ckpt_<name> checkpoint directory") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import scala.jdk.CollectionConverters._
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // onQueryStarted runs before start() returns, so every drain's name
+    // is recorded by the time its query closure does
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        Option(e.name).foreach(started.add)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      // a memory-sink drain and the foreachBatch drain of the IVF ingest
+      assert(graft.streaming.StreamingOps
+        .queries("streaming_event_counts")(spark, sf).collect().nonEmpty)
+      assert(graft.operators.RetrievalOps
+        .queries("streaming_ivf_ingest")(spark, sf).collect().nonEmpty)
+    } finally spark.streams.removeListener(listener)
+    val names = started.asScala.toSeq
+    assert(names.exists(_.startsWith("graft_sink_")) &&
+      names.exists(_.startsWith("graft_ivf_ingest_")), names)
+    names.foreach(n => assert(
+      !new java.io.File(s"${BenchEnv.localDir}/graft_ckpt_$n").exists(),
+      s"graft_ckpt_$n survived its drain"))
+  }
+
   test("observe() exposes running counters on a batch pass (T5)") {
     val observed = Tables.events(spark, sf)
       .observe("stats", count(lit(1)).as("n"),

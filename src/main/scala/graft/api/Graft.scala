@@ -664,12 +664,14 @@ object Graft {
   // localCheckpoint persists its RDD OUTSIDE the CacheManager, so
   // Dataset.unpersist cannot free it; track the RDD ids each checkpoint
   // creates and unpersist THOSE when superseded, bounding an N-round
-  // fixpoint loop to two generations of executor storage.
+  // fixpoint loop to two generations of executor storage. The ids come
+  // from the checkpointed frame's own LogicalRDD leaf, not from a diff of
+  // the context's persistent RDDs: a pin another thread makes while the
+  // checkpoint job runs must not be taken for this one's and freed.
   private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val out = df.localCheckpoint()
-    (out, (sc.getPersistentRDDs.keySet -- before).toSet)
+    (out, out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }.toSet)
   }
 
   private def freeCheckpoints(df: DataFrame, ids: Set[Int]): Unit = {
@@ -2168,7 +2170,12 @@ object Graft {
       // one, so make it visible next to the per-query numbers. And
       // track which RDD ids the build pinned (the eager checkpoint
       // materializes any nested lazy pins too): releaseQueryPins must
-      // never free a memo's blocks.
+      // never free a memo's blocks. Known limit: the protected set is a
+      // diff of the context's global persistent RDDs, so a pin another
+      // thread makes during the build is protected too. Under concurrent
+      // queries that over-protects: the pin leaks until the session ends,
+      // but no pin is ever freed early. ROADMAP item 4a's Pins API is the
+      // fix.
       val pinsBefore = s.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       val built = df.localCheckpoint()

@@ -50,6 +50,27 @@ import org.apache.spark.sql.functions._
   * declines a corpus-sized chunk frame. The ingest-state pin is the only
   * boundary that always materializes.
   *
+  * The run has two branches, and they run at the same time. Stages 1–2
+  * (ingest, then the dialogue append) stay on the calling thread. Stages
+  * 3–5 (dedup → curate → chunk → embed → index → retrieval demo) run on
+  * a second driver thread, `rag-index`, started as soon as the corpus
+  * frame exists. This is safe because the index is a function of the
+  * corpus only: it reads neither the ingest state nor the dialogues, and
+  * the branches write disjoint directories (`index`, `index_meta`,
+  * `retrieval_demo` against `state*` and `dialogues`). The dedup
+  * fixpoint frees only the checkpoints it made itself, so ingest's pin
+  * of the fresh docs survives it. Why: most stages of either branch run
+  * one or two tasks, so on a 4-core host the other branch's jobs fill
+  * cores that sat idle. The thread is created by `run`, not taken from a
+  * pool, so it starts with a copy of the caller's local properties: its
+  * jobs carry the caller's job group (cancelling the group stops both
+  * branches), scheduler pool and job tags. `run` returns only once both
+  * branches have ended; it throws the first failure and attaches the
+  * other branch's failure, if any, as suppressed. One failure behaviour
+  * differs from running the stages in order: a failing ingest no longer
+  * stops the index rewrite, which runs to its end and writes the same
+  * content a successful run would.
+  *
   * Run: `sbt "runMain graft.apps.RagPipeline <sfDir> <outDir>"`.
   */
 object RagPipeline {
@@ -112,30 +133,63 @@ object RagPipeline {
   }
 
   def run(spark: SparkSession, sfDir: String, outDir: String): Unit = {
-    // 1. ingest with exactly-once state (corpus layout: see the header)
+    // the corpus, for both branches (layout: see the header)
     val width = Tables.spreadWidth(spark)
     val docs = Tables.documents(spark, sfDir).repartition(width, col("doc_id"))
-    val fresh = ingest(spark, docs, s"$outDir/state")
+    // Stages 3–5 read only the corpus: they run on a thread of their own
+    // while this one ingests and appends the dialogues (see the header).
+    // Failures are queued in the order they happen.
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val indexBranch = new Thread(() =>
+      try buildIndex(docs, outDir)
+      catch { case e: Throwable => failures.add(e): Unit }, "rag-index")
+    indexBranch.start()
+    try {
+      // 1. ingest with exactly-once state
+      val fresh = ingest(spark, docs, s"$outDir/state")
 
-    // 2. "transcribe"/"diarize" stubs → production islands + alignment →
-    //    per-file dialogue (the reference's _save_transcription artifact).
-    //    INCREMENTAL: only fresh files are transcribed, and the state
-    //    gate makes the append exactly-once — a rerun appends nothing.
-    //    Both align inputs key on file_id = doc_id, so one doc_id layout
-    //    serves the whole stage (see the header).
-    val byFile = fresh.repartition(width, col("doc_id"))
-    val utt = TranscriptOps.align(
-      PipelineOps.fakeSegments(byFile), PipelineOps.fakeChunks(byFile))
-    utt.groupBy(col("file_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(
-            col("utt_idx"), col("speaker"), col("text"),
-            col("t_start"), col("t_end")))),
-          x => format_string("[%.2f-%.2f] %s: %s",
-            x.getField("t_start"), x.getField("t_end"),
-            x.getField("speaker"), x.getField("text"))), "\n").as("dialogue"))
-      .write.mode(SaveMode.Append).parquet(s"$outDir/dialogues")
+      // 2. "transcribe"/"diarize" stubs → production islands + alignment →
+      //    per-file dialogue (the reference's _save_transcription artifact).
+      //    INCREMENTAL: only fresh files are transcribed, and the state
+      //    gate makes the append exactly-once — a rerun appends nothing.
+      //    Both align inputs key on file_id = doc_id, so one doc_id layout
+      //    serves the whole stage (see the header).
+      val byFile = fresh.repartition(width, col("doc_id"))
+      val utt = TranscriptOps.align(
+        PipelineOps.fakeSegments(byFile), PipelineOps.fakeChunks(byFile))
+      utt.groupBy(col("file_id"))
+        .agg(array_join(
+          transform(array_sort(collect_list(struct(
+              col("utt_idx"), col("speaker"), col("text"),
+              col("t_start"), col("t_end")))),
+            x => format_string("[%.2f-%.2f] %s: %s",
+              x.getField("t_start"), x.getField("t_end"),
+              x.getField("speaker"), x.getField("text"))), "\n").as("dialogue"))
+        .write.mode(SaveMode.Append).parquet(s"$outDir/dialogues")
+    } catch { case e: Throwable => failures.add(e): Unit }
+    finally joinUninterruptibly(indexBranch)
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
+    println(s"[rag-pipeline] staged artifacts under $outDir")
+  }
 
+  /** Waits for `t` to end even if this thread is interrupted meanwhile
+    * (the interrupt is re-asserted afterwards): `run` never returns while
+    * its index branch still runs. */
+  private def joinUninterruptibly(t: Thread): Unit = {
+    var interrupted = false
+    while (t.isAlive)
+      try t.join() catch { case _: InterruptedException => interrupted = true }
+    if (interrupted) Thread.currentThread().interrupt()
+  }
+
+  /** Stages 3–5: a function of the corpus alone (it reads neither the
+    * ingest state nor the dialogues) that writes `index`, `index_meta`
+    * and `retrieval_demo` under `outDir`. */
+  private def buildIndex(docs: DataFrame, outDir: String): Unit = {
+    val spark = docs.sparkSession
     // 3. dedup + curate the text corpus (the selection stages the
     //    reference lacks), then chunk to overlapping windows. REBUILT
     //    from the full corpus each run — quota selection is global, so
@@ -182,7 +236,5 @@ object RagPipeline {
     Graft.cosineTopK(q,
         index.select(col("chunk_key").as("vec_id"), col("vec").as("embedding")), 3)
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/retrieval_demo")
-
-    println(s"[rag-pipeline] staged artifacts under $outDir")
   }
 }

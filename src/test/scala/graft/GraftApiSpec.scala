@@ -319,6 +319,42 @@ class GraftApiSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("clusterNearDups frees only its own checkpoints: a pin made during one survives") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    val sc = spark.sparkContext
+    // The first Aggregate planned is the fixpoint's first tracked
+    // checkpoint (the label seed): while that checkpoint runs, another
+    // thread pins an unrelated RDD.
+    val other = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[Int]]()
+    val pinMidCheckpoint = new org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (other.get == null && plan.exists(_.isInstanceOf[Aggregate])) {
+          val t = new Thread(() => other.set(sc.parallelize(1 to 4).persist()))
+          t.start()
+          t.join()
+        }
+        plan
+      }
+    }
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
+    val before = sc.getPersistentRDDs.keySet
+    spark.experimental.extraOptimizations = Seq(pinMidCheckpoint)
+    val got = try Graft.clusterNearDups(pairs, "a", "b").collect()
+      finally spark.experimental.extraOptimizations = Nil
+    assert(other.get != null, "no pin was made during the checkpoint")
+    val otherId = other.get.id
+    try {
+      assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+      assert(sc.getPersistentRDDs.contains(otherId),
+        "clusterNearDups unpersisted a pin it did not make")
+      // its own superseded generations are still freed: what stays is the
+      // pair checkpoint and the final label generation
+      assert((sc.getPersistentRDDs.keySet -- before - otherId).size == 2)
+    } finally other.get.unpersist(false): Unit
+  }
+
   test("quantileSketch: merge of split sketches reproduces full-data quantiles via sketchQuantiles") {
     import spark.implicits._
     val data = (1 to 1000).map(i => (if (i % 2 == 0) "a" else "b", (i * 7 % 101).toLong))

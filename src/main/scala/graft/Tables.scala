@@ -1,6 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -12,8 +15,82 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * difference between reading a column chunk and reading the lake.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** `<sfDir>/<name>.parquet`, read with the schema Spark infers from its
+    * footers — inferred once per session while the table's files stay
+    * the same.
+    *
+    * A schema-less `spark.read.parquet` runs one Spark job to read the
+    * footers on every call (80–100 ms per read on 4 local cores, most of
+    * a short query's build). So the session keeps, per path, the schema
+    * that inference returned and the key it returned it under:
+    *  - the path's file identity ([[fileIdentity]]): the sorted (relative
+    *    name, length, modification time) of every file under the path —
+    *    one file for a lake table, the part files of a Spark-written
+    *    directory;
+    *  - the session's values of the confs that change the inferred
+    *    schema ([[schemaConfs]]), e.g. `nanosAsLong`, which decides how
+    *    [[events]] sees `ts`.
+    * While the key matches, the read is `spark.read.schema(cached)`,
+    * which plans the same scan (same `ReadSchema`) and runs no job.
+    * Otherwise — a first read, or a read after the files or confs
+    * changed — Spark infers the schema again and it replaces the path's
+    * entry, so a changed lake still fails loudly where it did, and a
+    * missing path fails exactly as a plain read does. The cache is
+    * per session (weakly held, like the memo pins in `Graft`) and safe
+    * for concurrent callers: two racing misses both infer and store the
+    * same schema.
+    *
+    * Known limit: a rewrite that keeps every file's length and
+    * millisecond modification time is not seen, and the old schema
+    * is served until some file changes. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val key = (fileIdentity(spark, path), schemaConfs.map(spark.conf.getOption))
+    val cache = schemaCache.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+    Option(cache.get(path)) match {
+      case Some((k, schema)) if k == key => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        cache.put(path, (key, df.schema))
+        df
+    }
+  }
+
+  /** The parquet read confs that change the schema Spark infers from the
+    * same footers (timestamp and binary mappings, and which footers are
+    * merged). */
+  private val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private type SchemaKey = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  private val schemaCache: java.util.Map[SparkSession,
+      ConcurrentHashMap[String, (SchemaKey, StructType)]] =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[String, (SchemaKey, StructType)]]())
+
+  /** The sorted (name relative to `path`, length, modification time in
+    * ms) of every file under `path`, or of `path` itself if it is a
+    * file; empty if it does not exist (or vanishes while it is listed).
+    * Two listings are equal while no file under `path` was added,
+    * removed or rewritten with a new length or mtime. */
+  private[graft] def fileIdentity(spark: SparkSession, path: String)
+      : Seq[(String, Long, Long)] = {
+    import org.apache.hadoop.fs.FileStatus
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val prefix = fs.makeQualified(root).toString
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toString.stripPrefix(prefix), st.getLen,
+                st.getModificationTime))
+    try walk(fs.getFileStatus(root)).sorted
+    catch { case _: java.io.FileNotFoundException => Nil }
+  }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame  = table(spark, sfDir, "documents")
 

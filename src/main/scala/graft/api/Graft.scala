@@ -2074,12 +2074,19 @@ object Graft {
     * drops ALL entries whose context is stopped, so a multi-session
     * JVM (test suites stop sessions per suite) sheds dead sessions'
     * memos — and their localCheckpoint blocks — on the next memo use
-    * by any live session. */
+    * by any live session.
+    *
+    * Each entry also holds the [[graft.Tables.fileIdentity]] of its dir
+    * at build time: a memo is served only while the dir's files are
+    * unchanged, so a table rewritten under the same dir in the same
+    * session is rebuilt from the new files, not served from the old
+    * checkpoint. */
+  private type MemoEntry = (Seq[(String, Long, Long)], DataFrame)
   private val sharedMemo: java.util.Map[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]] =
+      java.util.concurrent.ConcurrentHashMap[(String, String), MemoEntry]] =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]]())
+        java.util.concurrent.ConcurrentHashMap[(String, String), MemoEntry]]())
 
   // ---- plan-ledger memo instrumentation (r10 verdict #1) -----------
   /** Scan fingerprint of each memoized exchange's PRE-checkpoint build
@@ -2139,7 +2146,7 @@ object Graft {
         if (again != null) again
         else {
           val fresh = new java.util.concurrent.ConcurrentHashMap[
-            (String, String), DataFrame]()
+            (String, String), MemoEntry]()
           sharedMemo.put(s, fresh)
           fresh
         }
@@ -2151,14 +2158,16 @@ object Graft {
     if (s.sparkContext.isStopped) { sharedMemo.remove(s); perSession.clear() }
     touchedMemoLabels.get() += label
     val key = (label, dir)
+    val files = graft.Tables.fileIdentity(s, dir)
     val cached = perSession.get(key)
-    if (cached != null) cached
+    if (cached != null && cached._1 == files) cached._2
     else {
       // NOT computeIfAbsent: builds are reentrant (one memoized build
       // consumes another — jaccardPairs reads shingled), and a nested
       // computeIfAbsent on the same CHM throws "Recursive update".
-      // putIfAbsent races at worst double-build one checkpoint; the
-      // first registration wins and both callers converge on it.
+      // Racing builds at worst double-build one checkpoint: the merge
+      // below keeps the first entry registered for these files, and
+      // both callers converge on it.
       val df = build
       // fingerprint BEFORE the checkpoint erases the scan lineage;
       // put (not putIfAbsent): a REBUILD in a later session of the
@@ -2175,14 +2184,16 @@ object Graft {
       // thread makes during the build is protected too. Under concurrent
       // queries that over-protects: the pin leaks until the session ends,
       // but no pin is ever freed early. ROADMAP item 4a's Pins API is the
-      // fix.
+      // fix. Known limit of the file-identity key: an entry replaced
+      // after its dir's files changed leaves its pins in the protected
+      // set, so they stay until the session ends.
       val pinsBefore = s.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       val built = df.localCheckpoint()
       System.err.println(f"[memo-build] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
       protectPinIds(s, (s.sparkContext.getPersistentRDDs.keySet -- pinsBefore).toSeq)
-      val prev = perSession.putIfAbsent(key, built)
-      if (prev != null) prev else built
+      perSession.merge(key, (files, built),
+        (old, mine) => if (old._1 == files) old else mine)._2
     }
   }
 

@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   * Where the reference stages through the filesystem and re-reads every
   * pass, each stage here is a lazy plan over the previous stage's
   * parquet, except for three frames laid out or pinned on purpose:
-  *  - the corpus, read once and hash-partitioned by `doc_id` at
-  *    [[Tables.spreadWidth]], for ingest and stage 3;
+  *  - the corpus, laid out once — one frame, hash-partitioned by
+  *    `doc_id` at [[Tables.spreadWidth]], for ingest and stage 3. It is
+  *    a layout, not a pin: every execution that consumes it scans the
+  *    file and shuffles it again (ingest, the MinHash signatures, the
+  *    Jaccard verification and curation each start from a file scan);
   *  - the fresh docs, hash-partitioned by `doc_id` again before the
   *    transcript stubs, which carry it as `file_id`;
   *  - the curated chunk frame, pinned ([[Graft.pinBounded]]) for its two
@@ -221,8 +224,8 @@ object RagPipeline {
     val chunkKey = struct(col("doc_id"), col("chunk_idx"))
     val emb = PipelineOps.hashEmbeddings(
       chunks.select(chunkKey.as("doc_id"), col("chunk_text").as("text")))
-    emb.select(col("doc_id").as("chunk_key"), col("vec"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/index")
+    val indexRows = emb.select(col("doc_id").as("chunk_key"), col("vec"))
+    indexRows.write.mode(SaveMode.Overwrite).parquet(s"$outDir/index")
     chunks.select(chunkKey.as("chunk_key"), col("chunk_text"))
       .write.mode(SaveMode.Overwrite).parquet(s"$outDir/index_meta")
 
@@ -230,7 +233,9 @@ object RagPipeline {
     //    key flows through cosineTopK's join/window unchanged. The
     //    queries are the three smallest keys, not the first three rows
     //    read, so the demo does not depend on the index's file layout.
-    val index = spark.read.parquet(s"$outDir/index")
+    //    Read with the schema just written: inferring it from the footers
+    //    would cost a Spark job.
+    val index = spark.read.schema(indexRows.schema).parquet(s"$outDir/index")
     val q = index.orderBy(col("chunk_key")).limit(3)
       .select(col("chunk_key").as("qid"), col("vec").as("qvec"))
     Graft.cosineTopK(q,

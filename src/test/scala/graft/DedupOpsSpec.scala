@@ -228,4 +228,20 @@ class DedupOpsSpec extends SparkSpec {
     // same-word near-dup pair can never be missed by the blocker
     assert(rows.map(_._1).distinct.length == rows.length)
   }
+
+  test("a session memo is rebuilt when its dir's files change: dedup_minhash_lsh sees the new corpus") {
+    import spark.implicits._
+    // two corpora over the same ids whose verbatim-duplicate pair differs
+    def corpus(dup: (Long, Long)) = (1L to 4L).map { id =>
+      val text = if (id == dup._1 || id == dup._2) "a b c d e f" else s"a$id b$id c$id d$id e$id"
+      (id, text, "en", "src", text.length.toLong)
+    }.toDF("doc_id", "text", "lang", "source", "n_chars")
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_files").toString
+    def pairs = DedupOps.queries("dedup_minhash_lsh")(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    corpus(1L -> 2L).write.parquet(s"$dir/documents.parquet")
+    assert(pairs == Seq(1L -> 2L))
+    corpus(3L -> 4L).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(pairs == Seq(3L -> 4L))
+  }
 }

@@ -3,11 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // single-sourced session config (r15 advice #3): Bench, BenchOne
-    // and PlanDump share one builder so dumped plans ARE benched plans
-    val spark = BenchEnv.benchSessionBuilder(cpus).getOrCreate()
+    val spark = BenchEnv.session()
     spark.sparkContext.setLogLevel("WARN")
     // t4's INTENTIONALLY poisoned micro-batch logs a full stack trace
     // through the (async) streaming thread — at ERROR level, so ERROR

@@ -1,10 +1,11 @@
 package graft
 
-/** Shared bench-environment knobs.
+/** The one place a graft `SparkSession` is configured and built: every
+  * entry point and the test session run [[benchSessionBuilder]].
   *
   * `localDir`: where Spark writes shuffle/spill files. On this sandbox
   * the default (/tmp on the root virtio disk) carries a ~400 ms
-  * PER-EXCHANGE latency floor at steady state (FloorProbe, r5:
+  * PER-EXCHANGE latency floor at steady state (BENCH_NOTES §r5:
   * 2-stage 580 ms vs 1-stage 160 ms; 4-stage +~800 ms) that inflated
   * every shuffle-heavy TPC-H query 3-6× in the r4/r5 driver benches
   * while scan-only queries (q1/q6/q19) were untouched. Pointing
@@ -23,10 +24,20 @@ object BenchEnv {
     } catch { case _: Throwable => "/tmp" }
   }
 
-  /** THE bench session config, single-sourced (r15 advice #3): Bench,
-    * BenchOne and PlanDump must run identical sessions or dumped plans
-    * silently stop being the benched plans. Callers append only
-    * surface-specific extras (none today) and `.getOrCreate()`. */
+  /** Session width: `SPARK_GRAFT_CPUS`, else every available core. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  /** The session every main runs: [[benchSessionBuilder]] at [[cpus]]. */
+  def session(): org.apache.spark.sql.SparkSession =
+    benchSessionBuilder(cpus).getOrCreate()
+
+  /** THE session config, single-sourced: every entry point (Bench,
+    * BenchOne, PlanDump, Verify, PlanLedger, ScaleCurve, RagPipeline)
+    * and the test session run it, so the dumped, ledgered, verified,
+    * tested and benched plans are the same plans by construction.
+    * Callers append only surface-specific extras (the test session's
+    * app name) and `.getOrCreate()`. */
   def benchSessionBuilder(cpus: String): org.apache.spark.sql.SparkSession.Builder =
     org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Single-query timing harness for plan iteration: runs one registered
   * query N times (default 3) on a fresh session and prints each pass —
@@ -13,14 +12,9 @@ object BenchOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // single-sourced session config (r15 advice #3)
-    val spark = BenchEnv.benchSessionBuilder(cpus).getOrCreate()
+    val spark = BenchEnv.session()
     spark.sparkContext.setLogLevel("WARN")
     val fn = SparkEntry.queries(name)
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-      fn(spark, sfDir).explain("formatted")
     (1 to passes).foreach { i =>
       val pinsBefore = graft.api.Graft.pinSnapshot(spark)
       val t0 = System.nanoTime()

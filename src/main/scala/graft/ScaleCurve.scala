@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-exponent harness: times registered queries across the three
   * test SFs (sf0.001 / sf0.01 / sf0.1, 100× input growth end to end)
@@ -25,19 +24,7 @@ object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val keys = if (args.nonEmpty) args.toSeq else defaultKeys
     val sfs = Seq("sf0.001", "sf0.01", "sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", BenchEnv.localDir)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    val spark = BenchEnv.session()
     spark.sparkContext.setLogLevel("ERROR")
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     def time(key: String, dir: String): Double = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,23 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     def keep(name: String) = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 74 queries generate >>100 codegen'd stages; the default 100-entry
-      // class cache evicts between the two timed passes and every query
-      // pays Janino recompilation twice (measured: ta_langid 1.4s -> 4s)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // tolerate TIMESTAMP(NANOS) events layouts
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // report-sized outputs: tail orderBy keeps its order but sheds the
-      // range exchange + bounds-sampling job (TailSortSinglePartition)
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    val spark = BenchEnv.session()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -2,7 +2,7 @@ package graft.apps
 
 import graft.{BenchEnv, Tables}
 import graft.api.Graft
-import graft.operators.{PipelineOps, PrepOps, TranscriptOps}
+import graft.operators.{PipelineOps, PrepOps}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -74,7 +74,9 @@ import org.apache.spark.sql.functions._
   * stops the index rewrite, which runs to its end and writes the same
   * content a successful run would.
   *
-  * Run: `sbt "runMain graft.apps.RagPipeline <sfDir> <outDir>"`.
+  * Run: `sbt "runMain graft.apps.RagPipeline <sfDir> <outDir>"`. The
+  * session is [[BenchEnv.session]]: `local[SPARK_GRAFT_CPUS]`, else one
+  * slot per available core, like every other main.
   */
 object RagPipeline {
 
@@ -85,16 +87,22 @@ object RagPipeline {
     e.getMessage.contains("PATH_NOT_FOUND") ||
       e.getMessage.contains("Path does not exist")
 
+  /** The ingestion state's schema: [[ingest]] writes the state, always
+    * as this one column, so reading it needs no footer job. */
+  private val stateSchema = new org.apache.spark.sql.types.StructType()
+    .add("doc_id", org.apache.spark.sql.types.LongType)
+
   /** Current ingestion state: `stateDir`, else the `_old` generation a
-    * crash mid-swap may have left behind, else empty (first run). */
+    * crash mid-swap may have left behind, else empty (first run). A
+    * missing path still fails at the read, declared schema or not; a
+    * corrupt file fails in ingest's first job that scans the state. */
   private def readState(spark: SparkSession, stateDir: String): DataFrame = {
+    def read(dir: String) = spark.read.schema(stateSchema).parquet(dir)
     def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      new org.apache.spark.sql.types.StructType()
-        .add("doc_id", org.apache.spark.sql.types.LongType))
-    try spark.read.parquet(stateDir)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
+    try read(stateDir)
     catch { case e: org.apache.spark.sql.AnalysisException if isPathMissing(e) =>
-      try spark.read.parquet(stateDir + "_old")
+      try read(stateDir + "_old")
       catch { case e2: org.apache.spark.sql.AnalysisException if isPathMissing(e2) =>
         empty
       }
@@ -129,8 +137,7 @@ object RagPipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val outDir = if (args.length > 1) args(1) else "target/rag_pipeline_out"
-    val spark = BenchEnv.benchSessionBuilder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
+    val spark = BenchEnv.session()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, sfDir, outDir) finally spark.stop()
   }
@@ -158,16 +165,15 @@ object RagPipeline {
       //    Both align inputs key on file_id = doc_id, so one doc_id layout
       //    serves the whole stage (see the header).
       val byFile = fresh.repartition(width, col("doc_id"))
-      val utt = TranscriptOps.align(
+      //    Lines are ordered by `utt_idx`, the alignment's island index,
+      //    which is unique within a file.
+      val utt = Graft.alignTranscript(
         PipelineOps.fakeSegments(byFile), PipelineOps.fakeChunks(byFile))
       utt.groupBy(col("file_id"))
         .agg(array_join(
           transform(array_sort(collect_list(struct(
-              col("utt_idx"), col("speaker"), col("text"),
-              col("t_start"), col("t_end")))),
-            x => format_string("[%.2f-%.2f] %s: %s",
-              x.getField("t_start"), x.getField("t_end"),
-              x.getField("speaker"), x.getField("text"))), "\n").as("dialogue"))
+              col("utt_idx"), Graft.renderDialogue(utt).as("line")))),
+            _.getField("line")), "\n").as("dialogue"))
         .write.mode(SaveMode.Append).parquet(s"$outDir/dialogues")
     } catch { case e: Throwable => failures.add(e): Unit }
     finally joinUninterruptibly(indexBranch)

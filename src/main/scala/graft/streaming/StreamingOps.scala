@@ -148,8 +148,8 @@ object StreamingOps {
     * call this in one JVM).
     *
     * `parts` sizes the drain's shuffle width = state stores per stateful
-    * operator. Default 4 — re-measured r16 on Spark 4.1 (Scratch, warm
-    * session, min-of-2, sf0.1/32 cores; r8's old optimum was 8): at
+    * operator. Default 4 — re-measured r16 on Spark 4.1 (warm session,
+    * min-of-2, sf0.1/32 cores; r8's old optimum was 8): at
     * oracle-drain state sizes per-partition store commit/maintenance ×
     * micro-batches dominates the data pass EVERYWHERE, so 4 is
     * neutral-to-better on every stateful drain and 16 is strictly worse:
@@ -197,9 +197,8 @@ object StreamingOps {
     // volume ÷ executor memory instead — the state-store-per-partition
     // arithmetic is the same, only the constant changes.
     // r16 (VERDICT r15 #4): the drain width is a SCALE-dependent knob
-    // — state stores per stateful operator — so it is conf-overridable
-    // (spark.graft.streaming.drainParts) with the measured per-query
-    // local optimum as the default. On a cluster size it to state
+    // — state stores per stateful operator — so each query passes the
+    // measured local optimum as `parts`. On a cluster size it to state
     // volume ÷ executor memory; locally the r11/r15 measurements stand
     // (8 for agg-shaped drains, 4 for stream-stream joins), and the
     // driver's 8-vs-32-core "anti-scaling" ratios did not reproduce on
@@ -207,15 +206,13 @@ object StreamingOps {
     // streaming_windowed_counts — the drain already runs at width 8
     // regardless of session cores).
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val effParts = s.conf.getOption("spark.graft.streaming.drainParts")
-      .map(_.toInt).getOrElse(parts)
-    s.conf.set("spark.sql.shuffle.partitions", effParts.toString)
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
     try withDrainCheckpoint(name) { ckpt =>
     val q = df.writeStream
       .outputMode(mode).format("memory").queryName(name)
       // state-store + offset-log commits fsync per partition per batch;
       // on this host's /tmp that is the same ~400 ms-class latency floor
-      // FloorProbe measured for shuffle files (BENCH_NOTES r5), so the
+      // measured for shuffle files (BENCH_NOTES §r5), so the
       // checkpoint goes on the same fast local dir the shuffle uses.
       // One-shot oracle drains never restart, so durability is moot.
       .option("checkpointLocation", ckpt)

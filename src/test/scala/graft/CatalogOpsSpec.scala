@@ -13,8 +13,13 @@ class CatalogOpsSpec extends SparkSpec {
 
   test("every oracleSql key has a queries entry (driver gate totality)") {
     val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet.diff(qs)
+    val os = SparkEntry.oracleSql.keySet
+    val orphans = os.diff(qs)
     assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
+    // and the other way: Verify dumps every registered query, and a dump
+    // without an oracle is never compared
+    val unchecked = qs.diff(os)
+    assert(unchecked.isEmpty, s"queries without oracleSql: $unchecked")
   }
 
   test("m0 census: one row per language, counts sum to corpus size") {

@@ -3,20 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM-wide session). */
+/** Shared local SparkSession for all suites (one JVM-wide session): the
+  * session every main runs, at a fixed width of 4. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // tolerate TIMESTAMP(NANOS) events layouts
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // tests run the same tail-sort rewrite the Verify gate runs
-      .config("spark.graft.tailSortSinglePartition", "true")
-      .getOrCreate()
+    val s = BenchEnv.benchSessionBuilder("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

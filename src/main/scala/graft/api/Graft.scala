@@ -655,12 +655,6 @@ object Graft {
       .select(col(idCol)).distinct()
   }
 
-  /** Connected components over an undirected pair list via iterative
-    * min-label propagation: returns (id, cluster_id) for every node in a
-    * pair, cluster_id = min member id. Per round: one node-keyed join +
-    * one min-aggregate, lineage truncated so the plan stays flat across
-    * rounds; rounds ≤ component diameter (near-dup graphs: 2-3). Backs
-    * `dedup_cluster_canonical`. */
   // localCheckpoint persists its RDD OUTSIDE the CacheManager, so
   // Dataset.unpersist cannot free it; track the RDD ids each checkpoint
   // creates and unpersist THOSE when superseded, bounding an N-round
@@ -765,112 +759,14 @@ object Graft {
     freeable.size
   }
 
-  def clusterNearDups(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
-    def free(ids: Set[Int]): Unit = freeCheckpoints(pairs, ids)
-
-    // Null node ids carry no identity to cluster by (and SQL set ops
-    // treat NULL=NULL while joins do not, so a null id inside the
-    // fixpoint's change-detection join could keep `changed` > 0
-    // forever). Excluded up front; a null-id row contributes nothing to
-    // connectivity by contract.
-    val p = pairs.select(col(aCol).cast("long").as("a"),
-                         col(bCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      .localCheckpoint()
-    val edges = p.union(p.select(col("b"), col("a"))).toDF("u", "v")
-    var (labels, labelIds) = checkpointTracked(
-      edges.groupBy(col("u")).agg(least(col("u"), min(col("v"))).as("lbl")))
-    var changed = 1L
-    while (changed > 0) {
-      val prop = edges
-        .join(labels.select(col("u").as("v"), col("lbl").as("nlbl")), "v")
-        .groupBy(col("u")).agg(min(col("nlbl")).as("plbl"))
-      val (next, nextIds) = checkpointTracked(
-        labels.join(prop, Seq("u"), "left")
-          .select(col("u"),
-            least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl")))
-      changed = next.join(labels.select(col("u"), col("lbl").as("old")), "u")
-        .filter(col("lbl") < col("old")).count()
-      free(labelIds) // superseded generation is dead once `changed` is materialized
-      labels = next
-      labelIds = nextIds
-    }
-    labels.select(col("u").as("id"), col("lbl").as("cluster_id"))
-  }
-
-  /** Connected components via alternating large-star/small-star
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC '14) — same contract as [[clusterNearDups]] (every
-    * node in a pair → (id, cluster_id = min member id)), different round
-    * complexity: O(log n) rounds regardless of component diameter, where
-    * min-label propagation needs diameter rounds. Use this for
-    * high-diameter graphs (chains of near-identical revisions, citation
-    * paths); propagation wins on the shallow 2-3-hop clusters typical of
-    * near-dup output. Per round each step is one groupBy + one join at
-    * edge cardinality; the edge set is localCheckpoint-truncated per
-    * round under the same generation-freeing discipline. */
-  def clusterNearDupsStar(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
-    starContract(pairs, aCol, bCol)._1
-
-  /** [[clusterNearDupsStar]] plus the round count, for the O(log n)
-    * termination property spec. */
-  private[graft] def starContract(pairs: DataFrame, aCol: String,
-                                  bCol: String): (DataFrame, Int) = {
-    // Same null-id contract as [[clusterNearDups]]: a null id would
-    // never match itself in the full-outer fixpoint join below (joins
-    // are not null-safe), so the while-loop could never terminate.
-    val p0 = pairs.select(col(aCol).cast("long").as("u"),
-                          col(bCol).cast("long").as("v"))
-      .filter(col("u").isNotNull && col("v").isNotNull)
-    val nodes = p0.select(col("u")).union(p0.select(col("v")))
-      .distinct().toDF("id").localCheckpoint()
-    // canonical (larger, smaller) orientation; self-loops contribute
-    // nothing to connectivity (their nodes re-enter via `nodes`)
-    var (edges, edgeIds) = checkpointTracked(
-      p0.filter(col("u") =!= col("v"))
-        .select(greatest(col("u"), col("v")).as("u"),
-                least(col("u"), col("v")).as("v"))
-        .distinct())
-    var rounds = 0
-    var changed = 1L
-    while (changed > 0) {
-      // large-star: over BOTH directions, hang every strictly-larger
-      // neighbor off the neighborhood min (keeps (larger, smaller)
-      // orientation: emitted (v, m) has v > u ≥ m)
-      val both = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = both.groupBy(col("u")).agg(least(min(col("v")), col("u")).as("m"))
-      val large = both.join(lsMin, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      // small-star: on (larger, smaller) edges, reconnect the node and
-      // all its smaller neighbors directly to the neighborhood min
-      val ssMin = large.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val nbrPart = large.join(ssMin, "u").filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val selfPart = ssMin.select(col("u"), col("m").as("v"))
-      val (next, nextIds) = checkpointTracked(nbrPart.union(selfPart).distinct())
-      // fixpoint: both steps are no-ops ⇔ the edge set is stable.
-      // Detected as ONE job — a full-outer join of the two (distinct)
-      // edge sets counting rows missing on either side — instead of the
-      // former two except().count() jobs per round (each an edge-scale
-      // anti-join); both inputs are localCheckpointed so the join reads
-      // cached partitions, not recomputed lineage.
-      changed = next.withColumn("__r", lit(1))
-        .join(edges.withColumn("__l", lit(1)), Seq("u", "v"), "full_outer")
-        .filter(col("__l").isNull || col("__r").isNull)
-        .count()
-      freeCheckpoints(pairs, edgeIds)
-      edges = next
-      edgeIds = nextIds
-      rounds += 1
-    }
-    // converged: every edge is (member, component-min center)
-    val labels = edges.select(col("u").as("id"), col("v").as("cluster_id"))
-      .union(edges.select(col("v").as("id"), col("v").as("cluster_id")))
-      .distinct()
-    val out = nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-    (out, rounds)
-  }
+  /** [[connectedComponentLabels]] under its default guard, over pairs in
+    * named id columns, as (id, cluster_id = min member id). Kept as a
+    * name for the benchmark's traced row census
+    * (`perfbench/src/perfbench/Layers.scala`); the engine's own callers
+    * call the kernel. */
+  def clusterNearDups(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
+    connectedComponentLabels(pairs.select(col(aCol).as("a"), col(bCol).as("b")))
+      .select(col("v").as("id"), col("lbl").as("cluster_id"))
 
   /** Symmetric int8 scalar quantization of an array column: one global
     * maxabs scale (positive rescaling preserves inner-product order, so
@@ -1173,8 +1069,8 @@ object Graft {
     * (round, a, b, cnt). Each round's 1-row argmax is localCheckpointed
     * so the pair-count subtree is not replanned into every later round,
     * and the corpus itself localCheckpoints every `checkpointEvery`
-    * rounds (freeing the superseded generation,
-    * [[clusterNearDups]]-style) so production round counts (tens of
+    * rounds (freeing the superseded generation through
+    * `checkpointTracked`) so production round counts (tens of
     * thousands) never accumulate an unbounded narrow-map lineage — and
     * NEVER re-shuffle the text: the only per-round exchange is the
     * (pair, count) aggregate.
@@ -1350,7 +1246,7 @@ object Graft {
     * graphs (detected with a single anti-join isEmpty) skip the term
     * entirely and run the lazy single-job linear-lineage loop; graphs
     * with sinks run the conservation form with per-iteration
-    * localCheckpoint under the [[clusterNearDups]] generation-freeing
+    * localCheckpoint under the `checkpointTracked` generation-freeing
     * discipline (two consumers per iteration would otherwise double the
     * replanned lineage every round). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wgtCol: String,
@@ -1421,7 +1317,7 @@ object Graft {
         // (2^iterations leaf growth — measured 176 duplicate scans at 3
         // iterations). localCheckpoint per iteration bounds the plan to
         // one round, same generation-freeing discipline as
-        // clusterNearDups; at cluster scale this slot is reliable
+        // bpeTrainEncode; at cluster scale this slot is reliable
         // checkpointing on a cadence.
         val (next, ids) = checkpointTracked(
           n1.join(contrib, n1("node") === contrib("dst"), "left")
@@ -3211,46 +3107,56 @@ object Graft {
               col("dist2"), col("n_candidates")) ++ carry.map(col): _*)
   }
 
-  /** Connected-component labels to FIXPOINT over a SYMMETRIC (a, b)
-    * edge list — returns (v, lbl) with lbl = the component's min id
+  /** Connected-component labels to FIXPOINT over an undirected (a, b)
+    * pair list, each pair in either orientation (or both) — returns
+    * (v, lbl) for every node in a pair, lbl = the component's min id
     * (the true components, so a consumer's oracle replays them
     * engine-independently: recursive reachability + min, no depth
-    * coupling). Two paths behind one measured size guard, the
-    * GraphFrames discipline:
+    * coupling). A row with a null id carries no identity and is
+    * dropped; a self-pair labels its own node. The engine's one
+    * connected-components kernel: near-dup clustering (the
+    * dedup_cluster_* keys, dedup_keep_best, the RAG index's dedup), the
+    * co-purchase graph and DBSCAN labeling all run on it. Two paths
+    * behind one measured size guard, the GraphFrames discipline:
     *
-    *  - |E| ≤ `localEdgeThreshold` (default 1M pairs ≈ 16 MB): ONE
-    *    bounded collect + driver union-find with path compression —
-    *    exact in O(E α(E)). Iterative CC on a subgraph this small is
-    *    all scheduling: the distributed round was measured at a FIXED
+    *  - pairs ≤ `localEdgeThreshold` (default 1M, counted as passed in,
+    *    ≈ 16 MB): ONE bounded collect of each pair once + driver
+    *    union-find with path compression — exact in O(E α(E)), blind to
+    *    orientation. Iterative CC on a subgraph this small is all
+    *    scheduling: the distributed round was measured at a FIXED
     *    ~0.2-0.35 s of driver floor (Catalyst planning in a DataFrame
     *    loop, DAG submission in an RDD loop — substrate-independent)
     *    × ~13 rounds at sf0.1's giant component, 4.5 s to label 30k
     *    edges. The collect is the repo's declared bounded-driver
     *    pattern: the bound is the guard itself.
-    *  - above the guard: HashMin + pointer jumping on
-    *    RDD[(Long, Long)] (Pregel-class iteration is the imperative
-    *    kernel RDDs exist for; a DataFrame loop re-pays full Catalyst
-    *    planning every round for a data-dependent round count no
-    *    unroll can amortize). Partitioner sized to ~50k edges/task,
-    *    conf-bounded upward. Per-round cost is one co-partitioned
-    *    join + reduceByKey + one jump self-join; labels only decrease
-    *    under min-propagation, so the per-round BigInt label sum is
-    *    an exact convergence witness (one small action per round).
-    *    `maxRounds` = 64 is a safety bound (pointer doubling covers
-    *    diameter 2⁶⁴).
+    *  - above the guard: the pairs are symmetrized, then HashMin +
+    *    pointer jumping on RDD[(Long, Long)] (Pregel-class iteration is
+    *    the imperative kernel RDDs exist for; a DataFrame loop re-pays
+    *    full Catalyst planning every round for a data-dependent round
+    *    count no unroll can amortize). Partitioner sized to ~50k
+    *    symmetrized edges/task, conf-bounded upward. Per-round cost is
+    *    one co-partitioned join + reduceByKey + one jump self-join;
+    *    labels only decrease under min-propagation, so the per-round
+    *    BigInt label sum is an exact convergence witness (one small
+    *    action per round). `maxRounds` = 64 is a safety bound (pointer
+    *    doubling covers diameter 2⁶⁴).
     *
-    * Round14Spec pins the two paths equal on the sf0.01 core graph.
-    * Backs geo_dbscan_label. */
-  def connectedComponentLabels(symEdges: DataFrame,
+    * A guard of 0 runs every non-empty pair set through the distributed
+    * loop: graph_connected_components_loop and dedup_cluster_star keep
+    * it under Verify/Bench that way. Round14Spec pins the two paths
+    * equal on the sf0.01 core graph, RoundTwoOpsSpec on the dedup
+    * graph, ClusterProperties on random graphs. */
+  def connectedComponentLabels(pairs: DataFrame,
       maxRounds: Int = 64,
       localEdgeThreshold: Long = 1000000L): DataFrame = {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
-    val s = symEdges.sparkSession
-    // edges keyed by destination: (b, a) — the propagation join side
-    val edgesRaw = symEdges
-      .select(col("a").cast("long"), col("b").cast("long"))
+    val s = pairs.sparkSession
+    // pairs keyed by destination: (b, a) — the propagation join side
+    val edgesRaw = pairs
+      .select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
       .rdd.map(r => (r.getLong(1), r.getLong(0)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val eCount = edgesRaw.count()
@@ -3263,9 +3169,9 @@ object Graft {
         while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      val pairs = edgesRaw.collect()
+      val collected = edgesRaw.collect()
       edgesRaw.unpersist(blocking = false)
-      pairs.foreach { case (b, a) =>
+      collected.foreach { case (b, a) =>
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
@@ -3276,9 +3182,12 @@ object Graft {
     } else {
       val confPart = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
       val nPart = math.max(1L,
-        math.min(confPart.toLong, eCount / 50000L + 1L)).toInt
+        math.min(confPart.toLong, 2L * eCount / 50000L + 1L)).toInt
       val part = new HashPartitioner(nPart)
-      val edges = edgesRaw.partitionBy(part)
+      val edges = edgesRaw
+        .flatMap { case (b, a) =>
+          if (a == b) Iterator((b, a)) else Iterator((b, a), (a, b)) }
+        .partitionBy(part)
         .persist(StorageLevel.MEMORY_AND_DISK)
       var labels: RDD[(Long, Long)] = edges.values.distinct(nPart)
         .map(v => (v, v))
@@ -3413,7 +3322,7 @@ object Graft {
     }
     val tag = java.security.MessageDigest.getInstance("SHA-256")
       .digest((s"$fixtureTagFormat/$recipeVersion\u0000" +
-          canonical.toString + " " + stamp)
+          canonical.toString + "\u0000" + stamp)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .take(12).map(b => f"$b%02x").mkString
     val base = new java.io.File("target/graft_file_fixtures").getAbsoluteFile

@@ -60,9 +60,9 @@ import org.apache.spark.sql.functions._
   * frame exists. This is safe because the index is a function of the
   * corpus only: it reads neither the ingest state nor the dialogues, and
   * the branches write disjoint directories (`index`, `index_meta`,
-  * `retrieval_demo` against `state*` and `dialogues`). The dedup
-  * fixpoint frees only the checkpoints it made itself, so ingest's pin
-  * of the fresh docs survives it. Why: most stages of either branch run
+  * `retrieval_demo` against `state*` and `dialogues`). The dedup's
+  * components kernel unpersists only the RDDs it made itself, so
+  * ingest's pin of the fresh docs survives it. Why: most stages of either branch run
   * one or two tasks, so on a 4-core host the other branch's jobs fill
   * cores that sat idle. The thread is created by `run`, not taken from a
   * pool, so it starts with a copy of the caller's local properties: its
@@ -207,12 +207,15 @@ object RagPipeline {
     //    at 100 TB this stage gates on a curation-state table instead).
     //    3a. near-dup CLUSTER dedup before quota selection: LSH pairs →
     //    connected components → drop every non-canonical member. The
-    //    non-canonical id set is dedup OUTPUT-sized (tiny), so it
-    //    broadcasts into a left-anti join against the corpus.
-    val nonCanonical = Graft.clusterNearDups(
-        Graft.minhashNearDups(docs, "doc_id", "text"), "a_id", "b_id")
-      .filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as("doc_id"))
+    //    pair set is dedup OUTPUT-sized, so the components kernel labels
+    //    it on the driver (one bounded collect) below its size guard;
+    //    the non-canonical id set is smaller still, so it broadcasts
+    //    into a left-anti join against the corpus.
+    val nonCanonical = Graft.connectedComponentLabels(
+        Graft.minhashNearDups(docs, "doc_id", "text")
+          .select(col("a_id").as("a"), col("b_id").as("b")))
+      .filter(col("v") =!= col("lbl"))
+      .select(col("v").as("doc_id"))
     val deduped = docs.join(broadcast(nonCanonical), Seq("doc_id"), "left_anti")
     val curated = Graft.curateQuota(
       graft.operators.CurationOps.scored(deduped), "doc_id", "text", "lang", "quality_e6", 50)

@@ -455,28 +455,24 @@ object DedupOps {
 
     // Near-dup CLUSTER resolution — the step that actually deletes
     // duplicates: connected components over the Jaccard pair graph via
-    // iterative min-label propagation, canonical doc = min doc_id per
+    // Graft.connectedComponentLabels, canonical doc = min doc_id per
     // component, keep-one-per-cluster decision as keep = (doc == canon).
-    // Each iteration is one join + one aggregate, both shuffling on
-    // node id; lineage is truncated per round (localCheckpoint) so the
-    // plan never grows with iteration count. Rounds ≤ graph diameter —
-    // near-dup components are shallow (pairs share a common ancestor
-    // text), so 2-3 rounds in practice; at 100 TB the same loop runs
-    // with reliable checkpointing, or the large-star/small-star variant
-    // (Kiveris et al., MapReduce CC) to force O(log n) rounds.
+    // The pair graph is output-sized (dozens of pairs at the test SFs),
+    // so the kernel's size guard takes its one bounded collect + driver
+    // union-find; past 1M pairs the same call runs the distributed
+    // HashMin + pointer-jumping loop.
     "dedup_cluster_canonical" -> ((s, dir) =>
-      canonicalClusters(graft.api.Graft.clusterNearDups(
-        jaccardPairs(s, dir, 0.5), "a_id", "b_id"))),
+      canonicalClusters(graft.api.Graft.connectedComponentLabels(dupGraph(s, dir)))),
 
-    // Same labels by a different algorithm: large-/small-star
-    // contraction (O(log n) rounds vs propagation's O(diameter)) —
-    // both reduce to cluster = min member, so ONE oracle checks both
-    // implementations. The star path is the 100 TB choice for deep
-    // components (revision chains); propagation stays the default for
-    // the shallow near-dup graphs this corpus produces.
+    // The same labels through the kernel's DISTRIBUTED loop: guard 0
+    // forces every non-empty pair graph past the union-find path, so
+    // the loop a 100 TB dedup graph would take runs under Verify/Bench
+    // on this corpus (graph_connected_components_loop does the same for
+    // the co-purchase graph). Both keys reduce to cluster = min member,
+    // so ONE oracle checks both paths.
     "dedup_cluster_star" -> ((s, dir) =>
-      canonicalClusters(graft.api.Graft.clusterNearDupsStar(
-        jaccardPairs(s, dir, 0.5), "a_id", "b_id"))),
+      canonicalClusters(graft.api.Graft.connectedComponentLabels(
+        dupGraph(s, dir), localEdgeThreshold = 0L))),
 
     // Quality-aware canonical selection: production dedup keeps the
     // BEST document per near-dup cluster (longest / highest quality —
@@ -493,9 +489,8 @@ object DedupOps {
     // shared fixed-point score (CurationOps.scored), so selection is
     // exact integer comparison — no float ties.
     "dedup_keep_best" -> ((s, dir) => {
-      val labels = graft.api.Graft.clusterNearDups(
-          jaccardPairs(s, dir, 0.5), "a_id", "b_id")
-        .select(col("id").as("doc_id"), col("cluster_id"))
+      val labels = graft.api.Graft.connectedComponentLabels(dupGraph(s, dir))
+        .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
       CurationOps.scored(Tables.documents(s, dir))
         .select(col("doc_id"), col("quality_e6"))
         .join(labels, "doc_id")
@@ -744,14 +739,19 @@ object DedupOps {
       .groupBy(col("doc_id"), col("lang"))
       .agg(expr("cast(sum(bit * shiftleft(cast(1 as bigint), j)) as bigint)").as("simhash"))
 
-  /** (id, cluster_id) labels → the canonical-keep census shape. */
+  /** The Jaccard ≥ 0.5 pair graph in the components kernel's (a, b)
+    * shape. */
+  private def dupGraph(s: SparkSession, dir: String): DataFrame =
+    jaccardPairs(s, dir, 0.5).select(col("a_id").as("a"), col("b_id").as("b"))
+
+  /** Kernel (v, lbl) labels → the canonical-keep census shape. */
   private def canonicalClusters(labels: DataFrame): DataFrame =
     labels
       .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("cluster_id"))).cast("int"))
-      .select(col("cluster_id"), col("id").as("doc_id"),
+        count(lit(1)).over(Window.partitionBy(col("lbl"))).cast("int"))
+      .select(col("lbl").as("cluster_id"), col("v").as("doc_id"),
               col("cluster_size"),
-              (col("id") === col("cluster_id")).cast("int").as("keep"))
+              (col("v") === col("lbl")).cast("int").as("keep"))
       .orderBy(col("cluster_id"), col("doc_id"))
 
   /** Shared recursive-CTE prefix computing (doc_id, cluster_id) labels
@@ -969,8 +969,8 @@ object DedupOps {
 
     "dedup_cluster_canonical" -> clusterCanonicalSql,
 
-    // star contraction computes the SAME labels (cluster = min member)
-    // by a different algorithm — one oracle, two implementations
+    // the kernel's distributed loop computes the SAME labels (cluster
+    // = min member) — one oracle, both paths
     "dedup_cluster_star" -> clusterCanonicalSql,
 
     "dedup_simhash" ->

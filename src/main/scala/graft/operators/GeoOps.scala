@@ -279,15 +279,13 @@ object GeoOps {
 
   /** DBSCAN cluster labeling over one pitch/cap candidate
     * instantiation: cluster = TRUE connected component (min core id)
-    * of the SYMMETRIZED core-core candidate subgraph via
+    * of the core-core candidate subgraph via
     * Graft.connectedComponentLabels; borders attach to the min
     * cluster among their core candidate neighbors; noise carries the
-    * typed -1 sentinel. The explicit symmetrization is a no-op on the
-    * uncapped candidate set (ε-adjacency is symmetric and every point
-    * probes) but REQUIRED under a per-cell cap, where (probe,
-    * representative) edges are one-directional: component semantics
-    * are undirected, so the union makes that true by construction on
-    * both paths of the CC (and the oracle unions the same way). */
+    * typed -1 sentinel. Under a per-cell cap the (probe,
+    * representative) edges are one-directional; the kernel reads its
+    * pairs as undirected on both of its paths (and the oracle unions
+    * the reversed edges), so component semantics hold either way. */
   private def labelFrame(s: SparkSession, dir: String, pitch: Long,
       cap: Option[Int]): DataFrame =
     labelFromPoints(points(s, dir), pitch, cap)
@@ -299,12 +297,11 @@ object GeoOps {
     val cand = epsilonPairs(pts, pitch, eps2 = 9000000L, cap)
       .localCheckpoint(false)
     val (counts, core) = dbscanCountsCore(cand)
-    val ce0 = cand
+    val coreEdges = cand
       .join(core.select(col("core_id").as("user_id")),
             Seq("user_id"), "left_semi")
       .join(core.select(col("core_id").as("nb")), Seq("nb"), "left_semi")
       .select(col("user_id").as("a"), col("nb").as("b"))
-    val coreEdges = ce0.union(ce0.select(col("b").as("a"), col("a").as("b")))
     val lbl = graft.api.Graft.connectedComponentLabels(coreEdges)
     // isolated cores (no core-core edge) label themselves
     val coreLbl = core
@@ -803,10 +800,10 @@ object GeoOps {
     * cls, cluster): recursive reachability (walk enumerates every
     * (vertex, reachable id) pair — fine at oracle SF) reduced by min
     * — depth-independent, so it matches the Spark side's fixpoint by
-    * construction. The explicit UNION symmetrization mirrors
-    * labelFrame: a no-op on uncapped candidates, REQUIRED under a
-    * per-cell cap where (probe, representative) edges are
-    * one-directional. */
+    * construction. The explicit UNION symmetrization is the SQL form
+    * of the Spark kernel's undirected reading: a no-op on uncapped
+    * candidates, REQUIRED under a per-cell cap where (probe,
+    * representative) edges are one-directional. */
   private def labelCteSql(suf: String): String =
     s"""counts$suf AS (SELECT user_id, count(*)::BIGINT AS n_within_r
        |  FROM cand$suf GROUP BY user_id),

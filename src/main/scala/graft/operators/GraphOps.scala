@@ -18,8 +18,9 @@ import org.apache.spark.sql.expressions.Window
   * (|V| rows) with the normalized edge list (|E| rows) plus one
   * sum-by-dst — both hash-partitioned on the join key; nothing is ever
   * collected to the driver. Convergence-loop form at 100 TB adds the
-  * same lineage discipline as `Graft.clusterNearDups`: localCheckpoint
-  * every k rounds and unpersist of the previous generation. Edge
+  * same lineage discipline as `Graft.pageRank`'s sink-mass loop:
+  * localCheckpoint every k rounds and unpersist of the previous
+  * generation. Edge
   * weights and out-degree normalization are computed once, outside the
   * loop, and reused across iterations (one materialized exchange).
   */
@@ -125,8 +126,8 @@ object GraphOps {
     // story (labels consolidate monotonically on this graph). At
     // 100 TB each round is a |E|-row equi-join against a |V|-row label
     // table — the Pregel message pattern expressed relationally; the
-    // unroll becomes a loop with the clusterNearDups checkpoint
-    // discipline. Edges use the min-support-2 contract shared with
+    // unroll becomes a loop with pageRank's generation-freeing
+    // checkpoint discipline. Edges use the min-support-2 contract shared with
     // graph_common_neighbors / graph_kcore_peel (r7 verdict #4):
     // single-co-occurrence hub edges dominate |E| while carrying no
     // community signal, and label prop is |E|-linear per round, so the
@@ -260,8 +261,7 @@ object GraphOps {
     // replay.
     "graph_connected_components" -> ((s, dir) => {
       val e0 = graft.api.Graft.coPurchaseEdges(s, dir, minSupport = 2)
-      val lbl = graft.api.Graft.connectedComponentLabels(
-        e0.union(e0.select(col("b").as("a"), col("a").as("b"))))
+      val lbl = graft.api.Graft.connectedComponentLabels(e0)
       lbl.groupBy(col("lbl").as("component"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("component"))
@@ -285,8 +285,7 @@ object GraphOps {
     // the guarded key above stays the fast path users run).
     "graph_connected_components_loop" -> ((s, dir) => {
       val e0 = graft.api.Graft.coPurchaseEdges(s, dir, minSupport = 2)
-      val lbl = graft.api.Graft.connectedComponentLabels(
-        e0.union(e0.select(col("b").as("a"), col("a").as("b"))),
+      val lbl = graft.api.Graft.connectedComponentLabels(e0,
         localEdgeThreshold = 0L)
       lbl.groupBy(col("lbl").as("component"))
         .agg(count(lit(1)).as("n_nodes"))

@@ -24,8 +24,10 @@ object FileSources {
 
   /** Wipe-or-fail (r10 advice): a path that survives delete() would
     * leave a mixed old/new fixture tree that the .complete sentinel
-    * then blesses — throw instead, like the Files.walk version did. */
-  private def deleteRecursively(f: java.io.File): Unit = {
+    * then blesses — throw instead, like the Files.walk version did.
+    * Shared by the file and streaming fixtures and the test suite's
+    * temp directories. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
     if (!f.delete() && f.exists())
       throw new java.io.IOException(s"fixture wipe failed: cannot delete $f")

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.FileSources.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,15 +29,6 @@ import org.apache.spark.sql.types._
   * directory scan.
   */
 object StreamingOps {
-
-  /** Wipe-or-fail (r10 advice): a path that survives delete() would
-    * leave a mixed old/new fixture tree that the .complete sentinel
-    * then blesses — throw instead, like the Files.walk version did. */
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    if (!f.delete() && f.exists())
-      throw new java.io.IOException(s"fixture wipe failed: cannot delete $f")
-  }
 
   /** Fixture for T4: three single-batch JSON-lines files, one poisoned
     * (a negative amount). Sentinel-idempotent like FileSources. */

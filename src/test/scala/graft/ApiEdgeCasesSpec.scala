@@ -242,7 +242,8 @@ class ApiEdgeCasesSpec extends SparkSpec {
       s"viral pairs: ${viralPairs.length}")
     // the small-band pair is still found by the all-pairs path
     assert(got.contains((1001L, 1002L)))
-    val labels = Graft.clusterNearDups(pairs, "a_id", "b_id").collect()
+    val labels = Graft.connectedComponentLabels(
+        pairs.select(col("a_id").as("a"), col("b_id").as("b"))).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert((1L to 300L).forall(labels(_) == 1L))
 
@@ -443,18 +444,17 @@ class ApiEdgeCasesSpec extends SparkSpec {
 
   test("cluster fixpoints exclude null node ids and terminate") {
     import spark.implicits._
-    // null ids never match themselves in a (non-null-safe) join: left
-    // inside the fixpoint they could keep `changed` > 0 forever. The
-    // contract: a null-id pair row contributes nothing to connectivity.
+    // a null id carries no identity (and would hit getLong as an NPE):
+    // the contract is that a null-id pair row contributes nothing to
+    // connectivity, on the union-find path and in the distributed loop.
     val pairs = Seq((Option(1L), Option(2L)), (Option(2L), Option(3L)),
         (Option.empty[Long], Option(4L)), (Option(5L), Option.empty[Long]),
         (Option.empty[Long], Option.empty[Long]))
       .toDF("a", "b")
-    Seq[(org.apache.spark.sql.DataFrame, String, String) => org.apache.spark.sql.DataFrame](
-      Graft.clusterNearDups, Graft.clusterNearDupsStar).foreach { f =>
-      val got = f(pairs, "a", "b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), got.toString)
+    Seq(1000000L, 0L).foreach { guard =>
+      val got = Graft.connectedComponentLabels(pairs, localEdgeThreshold = guard)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L), s"guard $guard: $got")
     }
   }
 

@@ -12,7 +12,7 @@ class BucketingSpec extends SparkSpec {
 
   test("co-bucketed fact tables join without any exchange") {
     import spark.implicits._
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val warehouse = tempDir("graft_buckets").toString
     val li = Tables.lineitem(spark, sf)
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
     val ord = Tables.orders(spark, sf)

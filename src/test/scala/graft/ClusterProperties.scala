@@ -3,14 +3,23 @@ package graft
 import graft.api.Graft
 import org.scalacheck.Gen
 
-/** Property coverage for connected-components clustering: random edge
-  * lists vs a driver-side union-find reference. Runs through the real
-  * Spark path (MemoryStream-free, tiny graphs), so it exercises the
-  * iterative join/aggregate loop and its termination, not just the
-  * algebra. Uses a bounded number of ScalaCheck samples via explicit
-  * iteration — each case is a full Spark fixpoint loop, so the sample
-  * count is kept small. */
+/** Property coverage for the connected-components kernel
+  * (`Graft.connectedComponentLabels`): random edge lists vs a
+  * driver-side union-find reference, on BOTH of the kernel's paths — the
+  * default guard (bounded collect + driver union-find) and guard 0 (the
+  * distributed HashMin + pointer-jumping loop). Runs through the real
+  * Spark path on tiny graphs, so it exercises the loop's termination,
+  * not just the algebra. Uses a bounded number of ScalaCheck samples via
+  * explicit iteration — each loop case is a full Spark fixpoint, so the
+  * sample count is kept small. */
 class ClusterProperties extends SparkSpec {
+
+  /** (v, lbl) of the kernel on `pairs` under the default guard and
+    * under guard 0, in that order. */
+  private def bothPaths(pairs: org.apache.spark.sql.DataFrame): Seq[Map[Long, Long]] =
+    Seq(Graft.connectedComponentLabels(pairs),
+        Graft.connectedComponentLabels(pairs, localEdgeThreshold = 0L))
+      .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
 
   private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()
@@ -27,13 +36,13 @@ class ClusterProperties extends SparkSpec {
     roots.map { case (x, r) => x -> minOf(r) }
   }
 
-  test("clusterNearDups == union-find on random graphs (incl. chains and cliques)") {
+  test("connectedComponentLabels == union-find on random graphs, both paths") {
     import spark.implicits._
     val edgeGen = for {
       n <- Gen.choose(1, 12)
       es <- Gen.listOfN(n, for {
         a <- Gen.choose(0L, 15L); b <- Gen.choose(0L, 15L) if a != b
-      } yield (math.min(a, b), math.max(a, b)))
+      } yield (a, b))
     } yield es.distinct
     val cases = Seq(
       // deterministic worst cases: a long chain (max diameter) + a clique
@@ -43,79 +52,26 @@ class ClusterProperties extends SparkSpec {
       edgeGen(Gen.Parameters.default.withSize(10),
               org.scalacheck.rng.Seed(42L + i)).get)
     cases.foreach { pairs =>
+      // pairs in either orientation: the generator keeps (a, b) as drawn
       val expected = unionFind(pairs)
-      val got = Graft.clusterNearDups(pairs.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"propagation, pairs=$pairs")
-      val gotStar = Graft.clusterNearDupsStar(pairs.toDF("a", "b"), "a", "b")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(gotStar == expected, s"star contraction, pairs=$pairs")
+      val Seq(guarded, loop) = bothPaths(pairs.toDF("a", "b"))
+      assert(guarded == expected, s"union-find path, pairs=$pairs")
+      assert(loop == expected, s"distributed loop, pairs=$pairs")
     }
   }
 
-  test("star contraction converges in O(log n) rounds on a path graph") {
-    import spark.implicits._
-    // a 33-node path is the worst case for label propagation (diameter
-    // 32 → ~32 rounds); star contraction must stay logarithmic
-    val n = 32L
-    val path = (0L until n).map(i => (i, i + 1))
-    val (labels, rounds) = Graft.starContract(path.toDF("a", "b"), "a", "b")
-    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == (0L to n).map(_ -> 0L).toMap)
-    val bound = 2 * (math.log(n.toDouble + 1) / math.log(2)).ceil.toInt + 2
-    assert(rounds <= bound, s"rounds=$rounds bound=$bound")
-  }
-
-  test("star-contraction change detector: symmetric-difference count is ONE job") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    // the fixpoint detector used inside starContract — a full-outer join
-    // of the two checkpointed edge generations counting one-sided rows —
-    // must be a single action (the old form was two except().count()
-    // jobs per round). AQE off: it splits one action into per-stage
-    // jobs and would make the count non-deterministic.
-    val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val a = Seq((1L, 2L), (2L, 3L)).toDF("u", "v").localCheckpoint()
-    val b = Seq((1L, 2L), (3L, 4L)).toDF("u", "v").localCheckpoint()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val changed = a.withColumn("__r", lit(1))
-        .join(b.withColumn("__l", lit(1)), Seq("u", "v"), "full_outer")
-        .filter(col("__l").isNull || col("__r").isNull)
-        .count()
-      assert(changed == 2) // (2,3) only in a, (3,4) only in b
-      // listener delivery is async — poll until the count settles
-      val deadline = System.currentTimeMillis() + 10000
-      var last = -1
-      while (jobs.get() != last && System.currentTimeMillis() < deadline) {
-        last = jobs.get(); Thread.sleep(200)
-      }
-      assert(jobs.get() == 1, s"detector ran ${jobs.get()} jobs, want 1")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    }
-  }
-
-  test("clusterNearDups{,Star} on an empty pair list return an empty frame") {
+  test("connectedComponentLabels: an empty pair list gives an empty frame") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(Graft.clusterNearDups(empty, "a", "b").count() == 0)
-    assert(Graft.clusterNearDupsStar(empty, "a", "b").count() == 0)
+    // 0 pairs ≤ guard 0, so both calls take the union-find path: the
+    // loop is never entered with nothing to label
+    assert(bothPaths(empty) == Seq(Map.empty, Map.empty))
   }
 
-  test("star contraction handles self-pairs and singleton components") {
+  test("connectedComponentLabels: a self-pair labels its own node, both paths") {
     import spark.implicits._
-    val pairs = Seq((7L, 7L), (1L, 2L)).toDF("a", "b")
-    val got = Graft.clusterNearDupsStar(pairs, "a", "b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(7L -> 7L, 1L -> 1L, 2L -> 1L))
+    val pairs = Seq((7L, 7L), (1L, 2L), (3L, 3L), (3L, 2L)).toDF("a", "b")
+    val want = Map(7L -> 7L, 1L -> 1L, 2L -> 1L, 3L -> 1L)
+    assert(bothPaths(pairs) == Seq(want, want))
   }
 }

@@ -28,7 +28,7 @@ class DedupOpsSpec extends SparkSpec {
       (5L, "y1 A2 B2 C2 D2 E2 y2 y3 P Q R S T"))
       .map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_exsub").toString
+    val dir = tempDir("graft_exsub").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = DedupOps.queries("dedup_exact_substring")(spark, dir).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3))))
@@ -77,7 +77,7 @@ class DedupOpsSpec extends SparkSpec {
         val len = 3 + rnd.nextInt(18)
         id -> Seq.fill(len)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
       }
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_exsub_f$seed").toString
+      val dir = tempDir(s"graft_exsub_f$seed").toString
       docs.map { case (id, t) => (id, t, "en", "src", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -236,7 +236,7 @@ class DedupOpsSpec extends SparkSpec {
       val text = if (id == dup._1 || id == dup._2) "a b c d e f" else s"a$id b$id c$id d$id e$id"
       (id, text, "en", "src", text.length.toLong)
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_memo_files").toString
+    val dir = tempDir("graft_memo_files").toString
     def pairs = DedupOps.queries("dedup_minhash_lsh")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     corpus(1L -> 2L).write.parquet(s"$dir/documents.parquet")

@@ -29,7 +29,7 @@ class FileSourcesSpec extends SparkSpec {
     // reference behavior: one bad file logs an error and the loop
     // continues (main.py:75-95). Relational form: PERMISSIVE mode parks
     // bad rows in a corrupt-record column; good rows flow through.
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjson")
+    val dir = tempDir("graft_badjson")
     java.nio.file.Files.write(dir.resolve("a.jsonl"),
       """{"key": "k1", "size": 10}
         |not json at all

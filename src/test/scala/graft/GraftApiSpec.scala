@@ -319,40 +319,45 @@ class GraftApiSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
-  test("clusterNearDups frees only its own checkpoints: a pin made during one survives") {
+  test("connectedComponentLabels frees only its own RDDs: a concurrent pin survives") {
     import spark.implicits._
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     val sc = spark.sparkContext
-    // The first Aggregate planned is the fixpoint's first tracked
-    // checkpoint (the label seed): while that checkpoint runs, another
-    // thread pins an unrelated RDD.
-    val other = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[Int]]()
-    val pinMidCheckpoint = new org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-      def apply(plan: LogicalPlan): LogicalPlan = {
-        if (other.get == null && plan.exists(_.isInstanceOf[Aggregate])) {
-          val t = new Thread(() => other.set(sc.parallelize(1 to 4).persist()))
-          t.start()
-          t.join()
-        }
-        plan
-      }
-    }
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a", "b")
-    val before = sc.getPersistentRDDs.keySet
-    spark.experimental.extraOptimizations = Seq(pinMidCheckpoint)
-    val got = try Graft.clusterNearDups(pairs, "a", "b").collect()
-      finally spark.experimental.extraOptimizations = Nil
-    assert(other.get != null, "no pin was made during the checkpoint")
-    val otherId = other.get.id
-    try {
-      assert(got.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-      assert(sc.getPersistentRDDs.contains(otherId),
-        "clusterNearDups unpersisted a pin it did not make")
-      // its own superseded generations are still freed: what stays is the
-      // pair checkpoint and the final label generation
-      assert((sc.getPersistentRDDs.keySet -- before - otherId).size == 2)
-    } finally other.get.unpersist(false): Unit
+    // guard → persistent RDDs the kernel leaves behind: none on the
+    // union-find path (its pair RDD is unpersisted after the collect, the
+    // labels are a plain parallelize); on the loop path only the result
+    // frame's own eager checkpoint
+    Seq(1000000L -> 0, 0L -> 1).foreach { case (guard, leftover) =>
+      // The first plan optimized once the rule is installed is the
+      // kernel's pair scan: while it is planned, another thread pins an
+      // unrelated RDD.
+      val other = new java.util.concurrent.atomic.AtomicReference[org.apache.spark.rdd.RDD[Int]]()
+      val pinMidRun = new org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+        def apply(plan: LogicalPlan): LogicalPlan = {
+          if (other.get == null) {
+            val t = new Thread(() => other.set(sc.parallelize(1 to 4).persist()))
+            t.start()
+            t.join()
+          }
+          plan
+        }
+      }
+      val before = sc.getPersistentRDDs.keySet
+      spark.experimental.extraOptimizations = Seq(pinMidRun)
+      val lbl = try Graft.connectedComponentLabels(pairs, localEdgeThreshold = guard)
+        finally spark.experimental.extraOptimizations = Nil
+      assert(other.get != null, "no pin was made during the run")
+      val otherId = other.get.id
+      try {
+        assert(lbl.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+          Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+        assert(sc.getPersistentRDDs.contains(otherId),
+          s"guard $guard: the kernel unpersisted a pin it did not make")
+        assert((sc.getPersistentRDDs.keySet -- before - otherId).size == leftover,
+          s"guard $guard: leftover pins")
+      } finally other.get.unpersist(false): Unit
+    }
   }
 
   test("quantileSketch: merge of split sketches reproduces full-data quantiles via sketchQuantiles") {

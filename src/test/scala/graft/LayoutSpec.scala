@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
 class LayoutSpec extends SparkSpec {
 
   test("date-partitioned events: filters become PartitionFilters, directories prune") {
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "graft_part").toString
+    val out = tempDir("graft_part", parent = "target").toString
     Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("day").parquet(out)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 class PartitionPruningSpec extends SparkSpec {
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val d = tempDir("graft_part").toString
     Tables.events(spark, sf)
       .withColumn("day", to_date(col("ts")))
       .write.partitionBy("day").mode("overwrite").parquet(d)
@@ -33,7 +33,7 @@ class PartitionPruningSpec extends SparkSpec {
     val fact = spark.read.parquet(dir)
     // the dim must be a SOURCE with a real selective filter — a
     // constant-folded LocalRelation doesn't qualify for DPP
-    val dimPath = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val dimPath = tempDir("graft_dim").toString
     (1 to 30).map(i => (java.sql.Date.valueOf(f"2024-01-$i%02d"), i))
       .toDF("d", "day_no").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter($"day_no".between(3, 5))

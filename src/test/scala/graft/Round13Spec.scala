@@ -262,8 +262,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("snapshotFixtureDir is write-once (sentinel-idempotent)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_snap_test")
-      .toString
+    val dir = tempDir("graft_snap_test").toString
     var writes = 0
     val p1 = graft.api.Graft.snapshotFixtureDir("r13spec_probe", dir) { out =>
       writes += 1
@@ -276,8 +275,7 @@ class Round13Spec extends SparkSpec {
     assert(p1 == p2 && writes == 1,
       "second call must reuse the completed snapshot without rewriting")
     // a different data dir gets its own tag
-    val other = java.nio.file.Files.createTempDirectory("graft_snap_test2")
-      .toString
+    val other = tempDir("graft_snap_test2").toString
     val p3 = graft.api.Graft.snapshotFixtureDir("r13spec_probe", other) { out =>
       writes += 1
     }

@@ -332,8 +332,7 @@ class Round14Spec extends SparkSpec {
 
   test("snapshotFixtureDir: concurrent first-build race resolves to one winner") {
     import java.nio.file.{Files, Paths}
-    val dataDir = Files.createTempDirectory(
-      Paths.get("target"), "r14_race_data")
+    val dataDir = tempDir("r14_race_data", parent = "target")
     Files.writeString(dataDir.resolve("a.txt"), "alpha")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build(): String =
@@ -364,8 +363,7 @@ class Round14Spec extends SparkSpec {
   test("snapshotFixtureDir: tag is content-stamped, not path-only") {
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
-    val dataDir = Files.createTempDirectory(
-      Paths.get("target"), "r14_stamp_data")
+    val dataDir = tempDir("r14_stamp_data", parent = "target")
     val f = dataDir.resolve("t.parquet")
     Files.writeString(f, "v1")
     def build(): String =

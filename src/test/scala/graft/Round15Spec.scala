@@ -294,8 +294,7 @@ class Round15Spec extends SparkSpec {
 
   test("snapshotFixtureDir: recipeVersion mints a fresh tag") {
     import java.nio.file.{Files, Paths}
-    val dataDir = Files.createTempDirectory(
-      Paths.get("target"), "r15_recipe_data")
+    val dataDir = tempDir("r15_recipe_data", parent = "target")
     Files.writeString(dataDir.resolve("a.txt"), "alpha")
     def build(v: Int): String =
       graft.api.Graft.snapshotFixtureDir("r15recipe", dataDir.toString,

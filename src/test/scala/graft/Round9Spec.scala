@@ -62,7 +62,7 @@ class Round9Spec extends SparkSpec {
 
   test("streaming minhash eviction: an idle band re-seeds, a live band links") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r9_stream").toString
+    val dir = tempDir("graft_r9_stream").toString
     val ta = "alpha beta gamma delta epsilon zeta"
     val tb = "omega psi chi phi upsilon tau"
     val docs = Seq(

@@ -322,12 +322,12 @@ class RoundTwoOpsSpec extends SparkSpec {
     assert(onePass == twoPass && onePass.nonEmpty)
   }
 
-  test("dedup_cluster_star labels equal propagation labels") {
-    val star = graft.operators.DedupOps.queries("dedup_cluster_star")(spark, sf)
+  test("dedup_cluster_star: the distributed loop equals the guarded components path") {
+    val loop = graft.operators.DedupOps.queries("dedup_cluster_star")(spark, sf)
       .collect().map(r => (r.getLong(1), r.getLong(0), r.getInt(2), r.getInt(3))).toSet
-    val prop = graft.operators.DedupOps.queries("dedup_cluster_canonical")(spark, sf)
+    val guarded = graft.operators.DedupOps.queries("dedup_cluster_canonical")(spark, sf)
       .collect().map(r => (r.getLong(1), r.getLong(0), r.getInt(2), r.getInt(3))).toSet
-    assert(star == prop && star.nonEmpty)
+    assert(loop == guarded && loop.nonEmpty)
   }
 
   test("NfcNormalize: NFD composes to precomposed, ASCII is identity, null-safe") {

@@ -69,10 +69,8 @@ class StreamingOpsSpec extends SparkSpec {
 
   test("checkpointed restart does not reprocess files (T2 exactly-once)") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ckpt = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "graft_ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "graft_out").toString
+    val ckpt = tempDir("graft_ckpt", parent = "target").toString
+    val out = tempDir("graft_out", parent = "target").toString
     def runOnce(): Unit = {
       val q = spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(sf)

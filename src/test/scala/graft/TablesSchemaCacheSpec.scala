@@ -11,9 +11,6 @@ import org.apache.spark.sql.types._
   * makes Spark infer the schema again. */
 class TablesSchemaCacheSpec extends SparkSpec {
 
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Jobs started while `body` runs. Listener events arrive in job order,
     * so the jobs seen between a marker job before `body` and one after
     * it are exactly the body's. */
@@ -53,7 +50,7 @@ class TablesSchemaCacheSpec extends SparkSpec {
   }
 
   test("a second read of an unchanged table starts no Spark job and keeps the schema") {
-    val dir = tempDir("graft_schema_hit")
+    val dir = tempDir("graft_schema_hit").toString
     spark.range(5).select(col("id").as("a"), col("id").cast("string").as("s"))
       .write.parquet(s"$dir/t.parquet")
     val (first, inferJobs) = jobsDuring(Tables.table(spark, dir, "t"))
@@ -65,7 +62,7 @@ class TablesSchemaCacheSpec extends SparkSpec {
   }
 
   test("a table rewritten at the same path with an added column is inferred again") {
-    val dir = tempDir("graft_schema_rewrite")
+    val dir = tempDir("graft_schema_rewrite").toString
     spark.range(3).select(col("id").as("a")).write.parquet(s"$dir/t.parquet")
     assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("a"))
     spark.range(3).select(col("id").as("a"), (col("id") * 2).as("b"))
@@ -82,7 +79,7 @@ class TablesSchemaCacheSpec extends SparkSpec {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val dir = tempDir("graft_schema_conf")
+    val dir = tempDir("graft_schema_conf").toString
     val schema = MessageTypeParser.parseMessageType("message t { required binary b; }")
     val writer = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$dir/bin.parquet"))

@@ -213,62 +213,34 @@ object Graft {
                       minJaccard: Double = 0.5, hashes: Int = 12,
                       bands: Int = 6, maxBandSize: Int = 4096): DataFrame = {
     require(hashes % bands == 0, "bands must divide hashes")
-    val rows = hashes / bands
-    val mh = docs
-      .filter(size(split(col(textCol), " ")) >= 2) // shingle-less docs can't near-dup
-      .select(col(idCol).as("doc_id"),
-        TextSignatures.minHashSig(TextSignatures.wordBigrams(col(textCol)), hashes).as("mhs"))
-      .repartition(col("doc_id"))
-    val bandCols = (0 until bands).map { k =>
-      concat((lit(s"$k:") +: (0 until rows).map(r =>
-        element_at(col("mhs"), k * rows + r + 1))): _*)
-    }
-    val banded = mh.select(col("doc_id"), explode(array(bandCols: _*)).as("band"))
+    val banded = minhashSignatures(docs, idCol, textCol, hashes).select(col("doc_id"),
+      explode(lshBandKeys(col("mhs"), bands, hashes / bands)).as("band"))
     val cand = cappedBucketPairs(banded, Seq("band"), "doc_id", maxBandSize)
-    val sh = docs.select(col(idCol).as("doc_id"),
+    val bg = docs.select(col(idCol).as("doc_id"),
         TextSignatures.wordBigramHashes(col(textCol)).as("bg"))
       .repartition(col("doc_id"))
-    val inter = SortedIntersectCount.sortedIntersectCountLong(col("bg_a"), col("bg_b"))
-    cand
-      .join(sh.select(col("doc_id").as("a_id"), col("bg").as("bg_a")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("bg").as("bg_b")), "b_id")
-      .withColumn("jaccard",
-        inter.cast("double") / (size(col("bg_a")) + size(col("bg_b")) - inter))
+    withJaccard(cand, bg)
       .filter(col("jaccard") >= minJaccard)
       .select(col("a_id"), col("b_id"), col("jaccard"))
   }
 
   /** SimHash near-dup pairs (multi-index hamming blocking, lossless for
     * maxHamming ≤ 3 over the 4 signature bytes — ONLY while every
-    * (bpos,bval) bucket stays under `maxBandSize`; the default leaves
-    * buckets uncapped to keep the guarantee). A byte bucket colliding
-    * does NOT imply similarity (unlike an LSH band), and the key space
-    * is just 4×256, so past ~1M docs buckets fill with heterogeneous
-    * non-duplicates and a capped star would drop true pairs. At that
-    * scale use [[simhash64NearDups]]: same pigeonhole over 4×16-bit
-    * chunks (65536 values each), which keeps buckets duplicate-
-    * dominated ~256× longer for the same candidate bound. */
+    * (byte position, value) bucket stays under `maxBandSize`; the
+    * default leaves buckets uncapped to keep the guarantee). A byte
+    * bucket colliding does NOT imply similarity (unlike an LSH band),
+    * and the key space is just 4×256, so past ~1M docs buckets fill
+    * with heterogeneous non-duplicates and a capped star would drop
+    * true pairs. At that scale use [[simhash64NearDups]]: same
+    * pigeonhole over 4×16-bit chunks (65536 values each), which keeps
+    * buckets duplicate-dominated ~256× longer for the same candidate
+    * bound. */
   def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
                       maxHamming: Int = 3,
                       maxBandSize: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3, "byte multi-index is lossless only for hamming <= 3")
-    val sh = docs.select(col(idCol).as("doc_id"),
-        TextSignatures.simHash32(col(textCol)).as("simhash"))
-      .repartition(col("doc_id"))
-    val probes = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(b =>
-        struct(lit(b).as("bpos"),
-               expr(s"cast((simhash >> ${8 * b}) & 255 as int)").as("bval"))): _*)).as("p"))
-      .select(col("doc_id"), col("simhash"),
-              col("p.bpos").as("bpos"), col("p.bval").as("bval"))
-    // capped candidates with the signatures carried through the pair
-    // generation (the byte buckets only SEED; bit_count decides) — no
-    // per-side re-join of the signature table
-    cappedBucketPairs(probes, Seq("bpos", "bval"), "doc_id", maxBandSize,
-        carryCols = Seq("simhash"))
-      .select(col("a_id"), col("b_id"),
-              expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    simhashPairs(docs, idCol, TextSignatures.simHash32(col(textCol)), 32, Nil,
+      maxHamming, maxBandSize)
   }
 
   /** 64-bit SimHash near-dup pairs — the scale path of
@@ -286,17 +258,85 @@ object Graft {
                         maxHamming: Int = 3,
                         maxBandSize: Int = Int.MaxValue): DataFrame = {
     require(maxHamming <= 3, "chunk multi-index is lossless only for hamming <= 3")
-    val sh = docs.select(col(idCol).as("doc_id"),
-        TextSignatures.simHash64(col(textCol)).as("simhash"))
+    simhashPairs(docs, idCol, TextSignatures.simHash64(col(textCol)), 64, Nil,
+      maxHamming, maxBandSize)
+  }
+
+  // ---- near-duplicate kernels --------------------------------------
+  // The one copy of each near-dup step. The API above, the dedup
+  // registry (DedupOps) and the streaming dedup (StreamingOps) all run
+  // on these, so a band layout or verify change moves every candidate
+  // set together; NearDupKernelSpec fails on a second copy.
+
+  /** Docs of fewer than 2 tokens have no word bigram and can near-dup
+    * nothing: their empty signatures would share every band (n² false
+    * candidates) and their Jaccard is 0/0. */
+  private[graft] def hasBigrams(text: Column): Column = size(split(text, " ")) >= 2
+
+  /** MinHash signature of `text`'s word bigrams: `hashes` seeded md5
+    * minima, one native pass per doc. */
+  private[graft] def minhashSignature(text: Column, hashes: Int = 12): Column =
+    TextSignatures.minHashSig(TextSignatures.wordBigrams(text), hashes)
+
+  /** Signature table (doc_id, mhs) of the docs with bigrams. The
+    * repartition is a materialization barrier: without it Catalyst
+    * collapses the signature projection into every band consumer. */
+  private[graft] def minhashSignatures(docs: DataFrame, idCol: String,
+      textCol: String, hashes: Int = 12): DataFrame =
+    docs.filter(hasBigrams(col(textCol)))
+      .select(col(idCol).as("doc_id"), minhashSignature(col(textCol), hashes).as("mhs"))
       .repartition(col("doc_id"))
-    val probes = sh.select(col("doc_id"), col("simhash"),
-      explode(array((0 until 4).map(c =>
-        struct(lit(c).as("cpos"),
-               expr(s"cast((simhash >> ${16 * c}) & 65535 as int)").as("cval"))): _*)).as("p"))
-      .select(col("doc_id"), col("simhash"),
-              col("p.cpos").as("cpos"), col("p.cval").as("cval"))
-    cappedBucketPairs(probes, Seq("cpos", "cval"), "doc_id", maxBandSize,
-        carryCols = Seq("simhash"))
+
+  /** LSH band keys of a signature column: an array of `bands` strings,
+    * band k = "k:" followed by signature positions k·rows+1 .. k·rows+rows.
+    * The default is the engine's 6 × 2 layout over 12 hashes. */
+  private[graft] def lshBandKeys(mhs: Column, bands: Int = 6, rows: Int = 2): Column =
+    array((0 until bands).map { k =>
+      concat((lit(s"$k:") +: (0 until rows).map(r =>
+        element_at(mhs, k * rows + r + 1))): _*)
+    }: _*)
+
+  /** Exact Jaccard over two SORTED distinct shingle-hash arrays: one
+    * codegen merge walk of primitive longs for the intersection, union
+    * by inclusion-exclusion. */
+  private[graft] def jaccard(a: Column, b: Column): Column = {
+    val inter = SortedIntersectCount.sortedIntersectCountLong(a, b)
+    inter.cast("double") / (size(a) + size(b) - inter)
+  }
+
+  /** Exact-Jaccard verify join: joins the bigram hashes (doc_id, bg)
+    * onto the pairs' `aCol` id (as bg_a), then their `bCol` id (as
+    * bg_b), and adds the unrounded `jaccard`. Callers round and filter. */
+  private[graft] def withJaccard(pairs: DataFrame, bigrams: DataFrame,
+      aCol: String = "a_id", bCol: String = "b_id"): DataFrame =
+    pairs
+      .join(bigrams.select(col("doc_id").as(aCol), col("bg").as("bg_a")), aCol)
+      .join(bigrams.select(col("doc_id").as(bCol), col("bg").as("bg_b")), bCol)
+      .withColumn("jaccard", jaccard(col("bg_a"), col("bg_b")))
+
+  /** SimHash multi-index near-dup pairs (a_id, b_id, hamming ≤
+    * maxHamming) over `sig`, a `sigBits`-bit signature of each doc,
+    * blocked by `blockCols`. Hamming ≤ 3 bit errors touch at most 3 of
+    * the signature's 4 chunks of sigBits/4 bits, so every qualifying
+    * pair shares a (blocks, chunk position, chunk value) bucket. The
+    * chunk buckets only SEED: the signatures ride through the capped
+    * pair generation and bit_count decides, with no per-side re-join
+    * of the signature table. */
+  private[graft] def simhashPairs(docs: DataFrame, idCol: String, sig: Column,
+      sigBits: Int, blockCols: Seq[String], maxHamming: Int,
+      maxBucketSize: Int): DataFrame = {
+    val chunkBits = sigBits / 4
+    val keep = col("doc_id") +: blockCols.map(col) :+ col("simhash")
+    val probes = docs
+      .select((col(idCol).as("doc_id") +: blockCols.map(col)) :+ sig.as("simhash"): _*)
+      .repartition(col("doc_id"))
+      .select(keep :+ explode(array((0 until 4).map(c =>
+        struct(lit(c).as("cpos"), expr(
+          s"cast((simhash >> ${chunkBits * c}) & ${(1 << chunkBits) - 1} as int)")
+          .as("cval"))): _*)).as("p"): _*)
+      .select(keep :+ col("p.cpos").as("cpos") :+ col("p.cval").as("cval"): _*)
+    cappedBucketPairs(probes, blockCols ++ Seq("cpos", "cval"), "doc_id",
+        maxBucketSize, carryCols = Seq("simhash"))
       .select(col("a_id"), col("b_id"),
               expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
       .filter(col("hamming") <= maxHamming)

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.api.Graft
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -36,34 +37,17 @@ object DedupOps {
     "list_distinct(list_transform(range(1, len(string_split(text,' '))), " +
       "i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1]))"
 
-  /** Exact Jaccard over two SORTED distinct shingle-hash arrays: one
-    * codegen merge walk of primitive longs for the intersection, union
-    * by inclusion-exclusion. */
-  private def jaccard(a: Column, b: Column): Column = {
-    val inter = graft.functions.SortedIntersectCount.sortedIntersectCountLong(a, b)
-    inter.cast("double") / (size(a) + size(b) - inter)
-  }
-
-  /** Shared MinHash signature table (12 perms) + 6×2 LSH banding —
-    * the ONE definition both the self-join (`dedup_minhash_lsh`) and
-    * incremental (`dedup_incremental`) variants band with; a band-layout
-    * change in one place cannot silently desynchronize their candidate
-    * sets. */
+  /** The dedup family's MinHash signature table (Graft.minhashSignatures
+    * over the spread corpus), session-memoized: every minhash key and the
+    * band-cap check in Verify read one build per session. */
   private[graft] def minhashSigs(s: SparkSession, dir: String): DataFrame =
-    graft.api.Graft.memoizedExchange("dedup_minhash_sigs", s, dir) {
-      Tables.documentsSpread(s, dir)
-        .filter(size(split(col("text"), " ")) >= 2)
-        .select(col("doc_id"), graft.functions.TextSignatures.minHashSig(
-          graft.functions.TextSignatures.wordBigrams(col("text")), 12).as("mhs"))
-        .repartition(col("doc_id"))
+    Graft.memoizedExchange("dedup_minhash_sigs", s, dir) {
+      Graft.minhashSignatures(Tables.documentsSpread(s, dir), "doc_id", "text")
     }
 
+  /** (doc_id, band) rows of a signature table, in Graft.lshBandKeys' layout. */
   private[graft] def lshBands(sigs: DataFrame): DataFrame =
-    sigs.select(col("doc_id"),
-      explode(array((0 until 6).map(k =>
-        concat(lit(s"$k:"),
-               element_at(col("mhs"), 2 * k + 1),
-               element_at(col("mhs"), 2 * k + 2))): _*)).as("band"))
+    sigs.select(col("doc_id"), explode(Graft.lshBandKeys(col("mhs"))).as("band"))
 
   /** Largest LSH band bucket on this corpus — the fixture assumption
     * behind every capped-pairs minhash oracle (r9 advice): the Spark
@@ -106,7 +90,7 @@ object DedupOps {
   }
 
   private[graft] def shingled(s: SparkSession, dir: String): DataFrame =
-    graft.api.Graft.memoizedExchange("dedup_shingled", s, dir) {
+    Graft.memoizedExchange("dedup_shingled", s, dir) {
       Tables.documentsSpread(s, dir)
         .select(col("doc_id"), col("lang"), col("n_chars"),
                 graft.functions.TextSignatures.wordBigramHashes(col("text")).as("bg"))
@@ -137,7 +121,7 @@ object DedupOps {
   // plan stays visible via jaccardPairsBuild for the plan-invariant
   // specs.
   private def jaccardPairs(s: SparkSession, dir: String, threshold: Double): DataFrame =
-    graft.api.Graft.memoizedExchange(
+    Graft.memoizedExchange(
         s"dedup_jaccard_pairs_$threshold", s, dir) {
       jaccardPairsBuild(s, dir, threshold)
     }
@@ -169,9 +153,9 @@ object DedupOps {
         col("a.doc_id") < col("b.doc_id") &&
         size(col("a.bg")).cast("double") >= lit(threshold) * size(col("b.bg")) &&
         size(col("b.bg")).cast("double") >= lit(threshold) * size(col("a.bg")) &&
-        jaccard(col("a.bg"), col("b.bg")) >= threshold)
+        Graft.jaccard(col("a.bg"), col("b.bg")) >= threshold)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-              jaccard(col("a.bg"), col("b.bg")).as("j"))
+              Graft.jaccard(col("a.bg"), col("b.bg")).as("j"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -233,7 +217,7 @@ object DedupOps {
       val sigs = minhashSigs(s, dir)
       val sh = shingled(s, dir).filter(size(col("bg")) > 0)
         .select(col("doc_id"), col("bg"))
-      val cand = graft.api.Graft.cappedBucketPairs(
+      val cand = Graft.cappedBucketPairs(
           lshBands(sigs).join(sigs, "doc_id"), Seq("band"), "doc_id", 4096,
           carryCols = Seq("mhs"))
       val est = cand.withColumn("matches", expr(
@@ -277,10 +261,7 @@ object DedupOps {
     "dedup_minhash_band_tuning" -> ((s, dir) => {
       val sigs = minhashSigs(s, dir) // already session-checkpointed
       Seq((12, 1), (6, 2), (4, 3), (3, 4), (2, 6)).map { case (b, r) =>
-        sigs.select(
-            explode(array((0 until b).map(k =>
-              concat(lit(s"$k:"),
-                concat_ws("", slice(col("mhs"), k * r + 1, r)))): _*)).as("band"))
+        sigs.select(explode(Graft.lshBandKeys(col("mhs"), b, r)).as("band"))
           .groupBy(col("band")).agg(count(lit(1)).as("m"))
           .agg(lit(b).as("n_bands"), lit(r).as("rows_per_band"),
                sum(expr("m * (m - 1) div 2")).as("n_candidates"))
@@ -387,14 +368,10 @@ object DedupOps {
       // Bands above the cap (a viral duplicate) degrade from all-pairs
       // to a star around the band min: linear candidates, connectivity
       // preserved for the downstream cluster resolution.
-      val cand = graft.api.Graft.cappedBucketPairs(
+      val cand = Graft.cappedBucketPairs(
         bands, Seq("band"), "doc_id", maxBucketSize = 4096)
-      val sh = shingled(s, dir).select(col("doc_id"), col("bg"))
-      cand
-        .join(sh.select(col("doc_id").as("a_id"), col("bg").as("bg_a")), "a_id")
-        .join(sh.select(col("doc_id").as("b_id"), col("bg").as("bg_b")), "b_id")
-        .select(col("a_id"), col("b_id"),
-                round(jaccard(col("bg_a"), col("bg_b")), 6).as("jaccard"))
+      Graft.withJaccard(cand, shingled(s, dir))
+        .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
         .filter(col("jaccard") >= 0.5)
         .orderBy(col("a_id"), col("b_id"))
     }),
@@ -443,12 +420,8 @@ object DedupOps {
           broadcast(newB.as("n")), col("c.band") === col("n.band"))
         .select(col("n.doc_id").as("new_id"), col("c.doc_id").as("corpus_id"))
         .distinct()
-      val sh = shingled(s, dir).select(col("doc_id"), col("bg"))
-      cand
-        .join(sh.select(col("doc_id").as("new_id"), col("bg").as("bg_n")), "new_id")
-        .join(sh.select(col("doc_id").as("corpus_id"), col("bg").as("bg_c")), "corpus_id")
-        .select(col("new_id"), col("corpus_id"),
-                round(jaccard(col("bg_n"), col("bg_c")), 6).as("jaccard"))
+      Graft.withJaccard(cand, shingled(s, dir), "new_id", "corpus_id")
+        .select(col("new_id"), col("corpus_id"), round(col("jaccard"), 6).as("jaccard"))
         .filter(col("jaccard") >= 0.5)
         .orderBy(col("new_id"), col("corpus_id"))
     }),
@@ -462,7 +435,7 @@ object DedupOps {
     // union-find; past 1M pairs the same call runs the distributed
     // HashMin + pointer-jumping loop.
     "dedup_cluster_canonical" -> ((s, dir) =>
-      canonicalClusters(graft.api.Graft.connectedComponentLabels(dupGraph(s, dir)))),
+      canonicalClusters(Graft.connectedComponentLabels(dupGraph(s, dir)))),
 
     // The same labels through the kernel's DISTRIBUTED loop: guard 0
     // forces every non-empty pair graph past the union-find path, so
@@ -471,7 +444,7 @@ object DedupOps {
     // the co-purchase graph). Both keys reduce to cluster = min member,
     // so ONE oracle checks both paths.
     "dedup_cluster_star" -> ((s, dir) =>
-      canonicalClusters(graft.api.Graft.connectedComponentLabels(
+      canonicalClusters(Graft.connectedComponentLabels(
         dupGraph(s, dir), localEdgeThreshold = 0L))),
 
     // Quality-aware canonical selection: production dedup keeps the
@@ -489,7 +462,7 @@ object DedupOps {
     // shared fixed-point score (CurationOps.scored), so selection is
     // exact integer comparison — no float ties.
     "dedup_keep_best" -> ((s, dir) => {
-      val labels = graft.api.Graft.connectedComponentLabels(dupGraph(s, dir))
+      val labels = Graft.connectedComponentLabels(dupGraph(s, dir))
         .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
       CurationOps.scored(Tables.documents(s, dir))
         .select(col("doc_id"), col("quality_e6"))
@@ -511,36 +484,22 @@ object DedupOps {
     // language instead of one task per language (a lang-equality join
     // serializes each language's n²/2 comparisons into a single task —
     // the classic low-cardinality skew trap).
-    "dedup_simhash" -> ((s, dir) => {
-      val sh = Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), col("lang"),
-                graft.functions.TextSignatures.simHash32(col("text")).as("simhash"))
-        .repartition(col("doc_id"))
-      val probes = sh.select(col("doc_id"), col("lang"), col("simhash"),
-        explode(array((0 until 4).map(b =>
-          struct(lit(b).as("bpos"),
-                 expr(s"cast((simhash >> ${8 * b}) & 255 as int)").as("bval"))): _*)).as("p"))
-        .select(col("doc_id"), col("lang"), col("simhash"),
-                col("p.bpos").as("bpos"), col("p.bval").as("bval"))
+    "dedup_simhash" -> ((s, dir) =>
       // UNCAPPED candidates (a pair can agree on several bytes —
       // cappedBucketPairs distincts) with signatures carried through
       // the pair generation; hamming verify is inline. No hot-bucket
       // cap here: unlike LSH bands (collision ⇒ similarity), a single
-      // signature byte colliding says nothing — (bpos,bval) has only
-      // 4×256 values, so buckets fill with heterogeneous NON-duplicates
+      // signature byte colliding says nothing — a (byte position, value)
+      // bucket has only 4×256 values, so buckets fill with heterogeneous NON-duplicates
       // once a lang block exceeds ~1M docs, and a star fallback would
       // drop true pairs. The cap-free byte index is what keeps the
       // documented "lossless for hamming ≤ 3" guarantee; the work bound
       // at that scale comes from dedup_simhash64's 16-bit chunk index
       // (4×65536 buckets), not from capping this one.
-      graft.api.Graft.cappedBucketPairs(
-          probes, Seq("lang", "bpos", "bval"), "doc_id",
-          maxBucketSize = Int.MaxValue, carryCols = Seq("simhash"))
-        .select(col("a_id"), col("b_id"),
-                expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
-        .filter(col("hamming") <= 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
+      Graft.simhashPairs(Tables.documentsSpread(s, dir), "doc_id",
+          graft.functions.TextSignatures.simHash32(col("text")), 32, Seq("lang"),
+          maxHamming = 3, maxBucketSize = Int.MaxValue)
+        .orderBy(col("a_id"), col("b_id"))),
 
     // 64-bit SimHash, blocked on (lang, 16-bit chunk pos, chunk value)
     // — the scale path of dedup_simhash: same pigeonhole losslessness
@@ -550,25 +509,11 @@ object DedupOps {
     // corpus before heterogeneous content makes them hot. The wider
     // signature also separates better: at 64 bits, unrelated docs sit
     // near hamming ~32, far above the ≤ 3 near-dup band.
-    "dedup_simhash64" -> ((s, dir) => {
-      val sh = Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), col("lang"),
-                graft.functions.TextSignatures.simHash64(col("text")).as("simhash"))
-        .repartition(col("doc_id"))
-      val probes = sh.select(col("doc_id"), col("lang"), col("simhash"),
-        explode(array((0 until 4).map(c =>
-          struct(lit(c).as("cpos"),
-                 expr(s"cast((simhash >> ${16 * c}) & 65535 as int)").as("cval"))): _*)).as("p"))
-        .select(col("doc_id"), col("lang"), col("simhash"),
-                col("p.cpos").as("cpos"), col("p.cval").as("cval"))
-      graft.api.Graft.cappedBucketPairs(
-          probes, Seq("lang", "cpos", "cval"), "doc_id",
-          maxBucketSize = Int.MaxValue, carryCols = Seq("simhash"))
-        .select(col("a_id"), col("b_id"),
-                expr("bit_count(simhash_a ^ simhash_b)").as("hamming"))
-        .filter(col("hamming") <= 3)
-        .orderBy(col("a_id"), col("b_id"))
-    }),
+    "dedup_simhash64" -> ((s, dir) =>
+      Graft.simhashPairs(Tables.documentsSpread(s, dir), "doc_id",
+          graft.functions.TextSignatures.simHash64(col("text")), 64, Seq("lang"),
+          maxHamming = 3, maxBucketSize = Int.MaxValue)
+        .orderBy(col("a_id"), col("b_id"))),
 
     // Repeated-n-gram scoring (the Lee et al. 2022 "Deduplicating
     // Training Data" signal at document granularity): fraction of a
@@ -621,7 +566,7 @@ object DedupOps {
     // slice/concat_ws/hash formulation pays interpreted lambda + boxing
     // per gram); the query binds it to the spread corpus at k=5
     "dedup_exact_substring" -> ((s, dir) =>
-      graft.api.Graft.exactSubstringDups(
+      Graft.exactSubstringDups(
           Tables.documentsSpread(s, dir), "doc_id", "text", k = 5)
         .withColumn("dup_frac", round(col("dup_frac"), 6))
         .orderBy(col("doc_id")).limit(300)),
@@ -633,7 +578,7 @@ object DedupOps {
     // the span arithmetic is plain SQL, so the DuckDB oracle replays
     // the identical seed→merge→cut chain on literal k-grams.
     "dedup_exact_substring_cut" -> ((s, dir) =>
-      graft.api.Graft.exactSubstringCut(
+      Graft.exactSubstringCut(
           Tables.documentsSpread(s, dir), "doc_id", "text", k = 5)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("long").as("n_tokens"),
@@ -678,7 +623,7 @@ object DedupOps {
     // not corpus². Verification is the zero-alloc sorted merge walk on
     // the candidate pairs only. Single-sourced in Graft.containmentPairs.
     "dedup_containment" -> ((s, dir) =>
-      graft.api.Graft.containmentPairsFromShingles(
+      Graft.containmentPairsFromShingles(
           shingled(s, dir).filter(size(col("bg")) > 0)
             .select(col("doc_id").as("__id"), col("bg").as("__bg"),
                     size(col("bg")).as("__n")), 0.8)

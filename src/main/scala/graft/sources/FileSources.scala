@@ -33,10 +33,16 @@ object FileSources {
       throw new java.io.IOException(s"fixture wipe failed: cannot delete $f")
   }
 
+  /** Root of the source tree [[fixtureDir]] builds. A root of its own:
+    * the tree is wiped whenever its sentinel is missing, so it must not
+    * share a directory with other fixtures (Graft.snapshotFixtureDir's
+    * roots live under target/graft_file_fixtures). */
+  private[graft] val sourceTreeRoot = "target/graft_file_fixtures_src"
+
   /** Idempotently materialize the fixture tree under target/ (kept
     * inside the repo; gitignored). */
   private def fixtureDir(): String = {
-    val root = Paths.get("target/graft_file_fixtures")
+    val root = Paths.get(sourceTreeRoot)
     // sentinel-based idempotence: a crash mid-creation leaves no marker,
     // so the partial tree is rebuilt rather than silently accepted
     val sentinel = root.resolve(".complete")
@@ -368,7 +374,7 @@ object FileSources {
     * are resolved to absolute at generation time (same JVM + cwd that
     * wrote the fixtures), so the driver's DuckDB can run from any cwd. */
   def oracles: Map[String, String] = {
-    val root = Paths.get("target/graft_file_fixtures").toAbsolutePath.toString
+    val root = Paths.get(sourceTreeRoot).toAbsolutePath.toString
     val metaRoot = Paths.get("target/graft_file_fixtures_meta").toAbsolutePath.toString
     Map(
       // `_metadata.file_name` census ≡ filename=true over the same shards

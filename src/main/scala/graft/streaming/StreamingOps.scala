@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.api.Graft
 import graft.sources.FileSources.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -94,7 +95,7 @@ object StreamingOps {
       // writes (r12 advice: the binding existed but never persisted, so
       // each write recomputed the source and its global-ntile shuffle)
       val persisted = src.persist()
-      val nt = graft.api.Graft.globalNtile(persisted, 4, "batch", col(orderCol))
+      val nt = Graft.globalNtile(persisted, 4, "batch", col(orderCol))
       (1 to 4).foreach { k =>
         val tmp = root.resolve(s"tmp_b$k")
         nt.filter(col("batch") === k)
@@ -135,16 +136,12 @@ object StreamingOps {
     graft.Tables.normalizeEventsTs(raw)
   }
 
-  /** Run a streaming DF to completion into a memory sink, return the
-    * final table. Unique sink name per invocation (Verify and Bench both
-    * call this in one JVM).
-    *
-    * `parts` sizes the drain's shuffle width = state stores per stateful
-    * operator. Default 4 — re-measured r16 on Spark 4.1 (warm session,
-    * min-of-2, sf0.1/32 cores; r8's old optimum was 8): at
-    * oracle-drain state sizes per-partition store commit/maintenance ×
-    * micro-batches dominates the data pass EVERYWHERE, so 4 is
-    * neutral-to-better on every stateful drain and 16 is strictly worse:
+  /** Shuffle width of every drain = state stores per stateful operator.
+    * 4, re-measured r16 on Spark 4.1 (warm session, min-of-2, sf0.1/32
+    * cores; r8's old optimum was 8): at oracle-drain state sizes
+    * per-partition store commit/maintenance × micro-batches dominates
+    * the data pass EVERYWHERE, so 4 is neutral-to-better on every
+    * stateful drain and 16 is strictly worse:
     *   minhash_dedup 3.85→3.02  state_rows   2.13→1.65  eviction 1.80→1.54
     *   late_arrival  1.90→1.62  topk/window  1.08→0.91  ivf_ingest 1.42→1.21
     *   milestones    1.19→1.03  windowed_cnt 1.05→0.99  session  1.79→1.74
@@ -153,10 +150,16 @@ object StreamingOps {
     *   changes results — only store count.
     * Fixed-cost floor measured r11 (BENCH_NOTES §r11): ~0.5-0.9 s/query
     * of start/stop + offset/commit-log + no-data-batch machinery that
-    * per-query isolation cannot amortize. */
-  private def drain(s: SparkSession, df: DataFrame, mode: String,
-                    parts: Int = 4): DataFrame =
-    drainWithHandle(s, df, mode, parts)._1
+    * per-query isolation cannot amortize. On a cluster, size it to
+    * state volume ÷ executor memory instead; the state-store-per-
+    * partition arithmetic is the same, only the constant changes. */
+  private val drainParts = 4
+
+  /** Run a streaming DF to completion into a memory sink, return the
+    * final table. Unique sink name per invocation (Verify and Bench both
+    * call this in one JVM). */
+  private def drain(s: SparkSession, df: DataFrame, mode: String): DataFrame =
+    drainWithHandle(s, df, mode)._1
 
   /** Runs a one-shot drain against the checkpoint directory
     * `graft_ckpt_<name>` under [[graft.BenchEnv.localDir]], then deletes
@@ -174,31 +177,17 @@ object StreamingOps {
     * queries that read the engine's own progress objects
     * (recentProgress) rather than the sink table. One copy of the
     * sink/checkpoint/trigger/conf-restore recipe for all drains. */
-  private def drainWithHandle(s: SparkSession, df: DataFrame, mode: String,
-      parts: Int = 4): (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
+  private def drainWithHandle(s: SparkSession, df: DataFrame,
+      mode: String): (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     val name = "graft_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // Stateful operators materialize 1-4 state stores PER shuffle
     // partition (a stream-stream join: keyToNumValues +
     // keyWithIndexToValue × both sides), each paying per-batch
-    // commit+maintenance. At oracle-drain state sizes (≤ ~100 k rows) 8
-    // partitions keeps plenty of parallelism while quartering that
-    // fixed overhead (measured: stream-stream join 7.3 → 3.7 s at
-    // sf0.1). The stream reads the conf at start(); the session value
-    // is restored right after, so the post-drain batch aggregate runs
-    // at full width. On a real cluster this knob is sized to state
-    // volume ÷ executor memory instead — the state-store-per-partition
-    // arithmetic is the same, only the constant changes.
-    // r16 (VERDICT r15 #4): the drain width is a SCALE-dependent knob
-    // — state stores per stateful operator — so each query passes the
-    // measured local optimum as `parts`. On a cluster size it to state
-    // volume ÷ executor memory; locally the r11/r15 measurements stand
-    // (8 for agg-shaped drains, 4 for stream-stream joins), and the
-    // driver's 8-vs-32-core "anti-scaling" ratios did not reproduce on
-    // a healthy host (BenchOne r16: 1.51 s at c8 vs 1.67 s at c32 on
-    // streaming_windowed_counts — the drain already runs at width 8
-    // regardless of session cores).
+    // commit+maintenance; [[drainParts]] holds that count. The stream
+    // reads the conf at start(); the session value is restored right
+    // after, so the post-drain batch aggregate runs at full width.
     val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    s.conf.set("spark.sql.shuffle.partitions", drainParts.toString)
     try withDrainCheckpoint(name) { ckpt =>
     val q = df.writeStream
       .outputMode(mode).format("memory").queryName(name)
@@ -499,7 +488,7 @@ object StreamingOps {
         col("user_id") === col("p_user_id") &&
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"))
-      drain(s, joined, "append", parts = 4)
+      drain(s, joined, "append")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_pairs"),
              countDistinct(col("click_id")).as("n_clicks_attributed"),
@@ -534,7 +523,7 @@ object StreamingOps {
           col("purchase_ts") >= col("click_ts") &&
           col("purchase_ts") <= col("click_ts") + expr("interval 1 hour"),
         "leftOuter")
-      drain(s, joined, "append", parts = 4)
+      drain(s, joined, "append")
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_rows"),
              count(col("purchase_ts")).as("n_matched"),
@@ -831,7 +820,7 @@ object StreamingOps {
       val raw = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).json(srcDir)
       val banded = raw
-        .filter(size(split(col("text"), " ")) >= 2)
+        .filter(Graft.hasBigrams(col("text")))
         // ingest time = doc_id + 1 seconds: doc 0 at epoch ZERO is
         // exactly on Spark's initial watermark and fMGWS drops it as
         // late, so its band state never seeds and the first island's
@@ -844,11 +833,9 @@ object StreamingOps {
         // late-drop artifact goes away. (r15 opt round, inherited fix)
         .withColumn("ts", timestamp_seconds(col("doc_id") + 1))
         .withWatermark("ts", "1 second")
-        .withColumn("mhs", graft.functions.TextSignatures.minHashSig(
-          graft.functions.TextSignatures.wordBigrams(col("text")), 12))
-        .select(col("ts"), col("doc_id"), explode(array((0 until 6).map(k =>
-          concat(lit(s"$k:"), element_at(col("mhs"), 2 * k + 1),
-                 element_at(col("mhs"), 2 * k + 2))): _*)).as("band"))
+        .withColumn("mhs", Graft.minhashSignature(col("text")))
+        .select(col("ts"), col("doc_id"),
+                explode(Graft.lshBandKeys(col("mhs"))).as("band"))
       val links = banded
         .select(col("band"), col("doc_id"), col("ts"))
         .as[(String, Long, java.sql.Timestamp)]
@@ -877,16 +864,8 @@ object StreamingOps {
       // exact-Jaccard verification reads the dedup family's memoized
       // bigram-hash exchange (same TextSignatures expression — one
       // shingling pass per session, shared with the batch dedup family)
-      val toks = graft.operators.DedupOps.shingled(s, dir)
-        .select(col("doc_id"), col("bg"))
-      val inter = graft.functions.SortedIntersectCount
-        .sortedIntersectCountLong(col("bg_a"), col("bg_b"))
-      broadcast(pairs)
-        .join(toks.select(col("doc_id").as("a_id"), col("bg").as("bg_a")), "a_id")
-        .join(toks.select(col("doc_id").as("b_id"), col("bg").as("bg_b")), "b_id")
-        .select(col("a_id"), col("b_id"),
-          round(inter.cast("double") /
-            (size(col("bg_a")) + size(col("bg_b")) - inter), 6).as("jaccard"))
+      Graft.withJaccard(broadcast(pairs), graft.operators.DedupOps.shingled(s, dir))
+        .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
         .filter(col("jaccard") >= 0.5)
         .orderBy(col("a_id"), col("b_id"))
     })

@@ -21,6 +21,7 @@ class ApiEdgeCasesSpec extends SparkSpec {
     assert(Graft.dedupExact(emptyDocs, "doc_id", "text").count() == 0)
     assert(Graft.minhashNearDups(emptyDocs, "doc_id", "text").count() == 0)
     assert(Graft.simhashNearDups(emptyDocs, "doc_id", "text").count() == 0)
+    assert(Graft.simhash64NearDups(emptyDocs, "doc_id", "text").count() == 0)
     assert(Graft.sampleDeterministic(emptyDocs, "doc_id", lit(10000)).count() == 0)
   }
 

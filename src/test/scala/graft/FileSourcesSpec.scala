@@ -19,6 +19,20 @@ class FileSourcesSpec extends SparkSpec {
     assert(rows.forall(_.getString(1).startsWith("[0.00-")))
   }
 
+  test("rebuilding the source tree leaves snapshot fixtures in place") {
+    import java.nio.file.{Files, Paths}
+    val dataDir = tempDir("graft_srctree_data", parent = "target")
+    Files.writeString(dataDir.resolve("a.txt"), "alpha")
+    val root = Paths.get(snapshotFixture("srctree_probe", dataDir.toString) { out =>
+      Files.createDirectories(Paths.get(out))
+    }).getParent
+    // a missing sentinel makes the next source-tree scan wipe and rebuild it
+    Files.deleteIfExists(Paths.get(FileSources.sourceTreeRoot, ".complete"))
+    assert(run("s4_wholetext_scan").count() == 2)
+    assert(Files.exists(root.resolve(".complete")),
+      "the source-tree rebuild deleted a snapshot fixture")
+  }
+
   test("s5 json state anti-join yields only the undownloaded key") {
     val keys = run("s5_json_state_antijoin").collect().map(_.getString(0))
     assert(keys.toSeq == Seq("downloads/b/w.webm"))

@@ -23,6 +23,11 @@ class GraftApiSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the query blocks by language; the API is unblocked → superset
     assert(q.subsetOf(api))
+    val api64 = Graft.simhash64NearDups(Tables.documents(spark, sf), "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val q64 = graft.operators.DedupOps.queries("dedup_simhash64")(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(q64.nonEmpty && q64.subsetOf(api64))
   }
 
   test("degenerate 1-token docs neither crash nor become false candidates") {

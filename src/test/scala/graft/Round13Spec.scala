@@ -264,19 +264,19 @@ class Round13Spec extends SparkSpec {
   test("snapshotFixtureDir is write-once (sentinel-idempotent)") {
     val dir = tempDir("graft_snap_test").toString
     var writes = 0
-    val p1 = graft.api.Graft.snapshotFixtureDir("r13spec_probe", dir) { out =>
+    val p1 = snapshotFixture("r13spec_probe", dir) { out =>
       writes += 1
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       ()
     }
-    val p2 = graft.api.Graft.snapshotFixtureDir("r13spec_probe", dir) { _ =>
+    val p2 = snapshotFixture("r13spec_probe", dir) { _ =>
       writes += 1
     }
     assert(p1 == p2 && writes == 1,
       "second call must reuse the completed snapshot without rewriting")
     // a different data dir gets its own tag
     val other = tempDir("graft_snap_test2").toString
-    val p3 = graft.api.Graft.snapshotFixtureDir("r13spec_probe", other) { out =>
+    val p3 = snapshotFixture("r13spec_probe", other) { out =>
       writes += 1
     }
     assert(p3 != p1 && writes == 2)

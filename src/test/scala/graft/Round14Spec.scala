@@ -336,7 +336,7 @@ class Round14Spec extends SparkSpec {
     Files.writeString(dataDir.resolve("a.txt"), "alpha")
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build(): String =
-      graft.api.Graft.snapshotFixtureDir("r14race", dataDir.toString) { out =>
+      snapshotFixture("r14race", dataDir.toString) { out =>
         builds.incrementAndGet()
         Thread.sleep(200) // widen the race window
         Files.createDirectories(Paths.get(out))
@@ -367,7 +367,7 @@ class Round14Spec extends SparkSpec {
     val f = dataDir.resolve("t.parquet")
     Files.writeString(f, "v1")
     def build(): String =
-      graft.api.Graft.snapshotFixtureDir("r14stamp", dataDir.toString) { out =>
+      snapshotFixture("r14stamp", dataDir.toString) { out =>
         Files.createDirectories(Paths.get(out))
         Files.writeString(Paths.get(out, "x"), "y")
       }

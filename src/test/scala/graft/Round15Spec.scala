@@ -297,7 +297,7 @@ class Round15Spec extends SparkSpec {
     val dataDir = tempDir("r15_recipe_data", parent = "target")
     Files.writeString(dataDir.resolve("a.txt"), "alpha")
     def build(v: Int): String =
-      graft.api.Graft.snapshotFixtureDir("r15recipe", dataDir.toString,
+      snapshotFixture("r15recipe", dataDir.toString,
           recipeVersion = v) { out =>
         Files.createDirectories(Paths.get(out))
         Files.writeString(Paths.get(out, "payload.txt"), s"v$v")

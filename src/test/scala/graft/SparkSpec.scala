@@ -24,8 +24,19 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** A fresh directory under `parent` (default: the JVM's temp dir),
     * deleted with everything in it when this suite ends. */
   protected def tempDir(prefix: String,
-      parent: String = System.getProperty("java.io.tmpdir")): Path = {
-    val d = Files.createTempDirectory(Paths.get(parent), prefix)
+      parent: String = System.getProperty("java.io.tmpdir")): Path =
+    deleteAfterSuite(Files.createTempDirectory(Paths.get(parent), prefix))
+
+  /** Graft.snapshotFixtureDir, with the fixture root it returns a path
+    * in deleted when this suite ends: each fresh data dir mints a root. */
+  protected def snapshotFixture(name: String, dataDir: String, recipeVersion: Int = 1)
+      (write: String => Unit): String = {
+    val p = graft.api.Graft.snapshotFixtureDir(name, dataDir, recipeVersion)(write)
+    deleteAfterSuite(Paths.get(p).getParent)
+    p
+  }
+
+  private def deleteAfterSuite(d: Path): Path = {
     tempDirs.add(d)
     d
   }

@@ -138,11 +138,12 @@ object Tables {
     * exists for external callers composing on [[events]] with their own
     * session. Set-if-absent (not set-per-call): repeated runtime-conf
     * writes are redundant mutation and would mask a caller who explicitly
-    * disabled the legacy read path — that caller now fails loudly at scan
-    * time instead of silently flipping behavior. */
+    * disabled the legacy read path — that caller fails loudly at scan
+    * time instead of silently flipping behavior. `getAll` holds only
+    * keys someone set: `getOption` returns the default "false" for an
+    * unset key too, and so cannot tell the two apart. */
   private[graft] def ensureEventsReadConf(spark: SparkSession): Unit =
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
+    if (!spark.conf.getAll.contains("spark.sql.legacy.parquet.nanosAsLong"))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** events schema exactly as Spark reads the current file footer

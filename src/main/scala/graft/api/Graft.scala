@@ -342,6 +342,98 @@ object Graft {
       .filter(col("hamming") <= maxHamming)
   }
 
+  // ---- retrieval kernels: one copy of each search step -------------
+  // The API, RetrievalOps, LexicalOps, PrepOps and PipelineOps run their
+  // searches on these; each caller keeps its own score expression,
+  // rounding, tie column and output names. KernelOwnershipSpec fails
+  // on a copy of a step outside this file.
+
+  /** The probe query set: the rows of `corpus` whose `idCol` is below
+    * `n`, as (qid, `cols`…). */
+  private[graft] def querySet(corpus: DataFrame, n: Int,
+      cols: Seq[Column] = Seq(col("v").as("qv")), idCol: String = "vec_id"): DataFrame =
+    corpus.filter(col(idCol) < n).select(col(idCol).as("qid") +: cols: _*)
+
+  /** A row is never its own neighbour. */
+  private[graft] def notSelf(idCol: String = "vec_id"): Column = col(idCol) =!= col("qid")
+
+  /** Scored pairs: the broadcast query set `q` (qid, …) against every
+    * other row of `corpus`, with `score` in `scoreCol`. The corpus
+    * streams out of its scan; only the query set moves. */
+  private[graft] def scoredPairs(corpus: DataFrame, q: DataFrame, score: Column,
+      scoreCol: String = "score", idCol: String = "vec_id"): DataFrame =
+    corpus.join(broadcast(q), notSelf(idCol)).withColumn(scoreCol, score)
+
+  /** Scored pairs over candidates already joined to their query (a
+    * probed cell, an LSH bucket, a beam hop): drop the self pair, add
+    * `score` in `scoreCol`. */
+  private[graft] def scoredPairs(cand: DataFrame, score: Column, scoreCol: String): DataFrame =
+    cand.filter(notSelf()).withColumn(scoreCol, score)
+
+  /** Rank within each `keys` group: `rankCol` = row_number ordered by
+    * (`score` desc, `tie`), so ties break the same way in every engine. */
+  private[graft] def rankBy(df: DataFrame, score: String, tie: String,
+      rankCol: String = "rank", keys: Seq[String] = Seq("qid")): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+      Window.partitionBy(keys.map(col): _*).orderBy(desc(score), col(tie))))
+
+  /** Per-key top-k: [[rankBy]], then `rankCol` ≤ k (k = 1 is the
+    * per-key argmax). */
+  private[graft] def topK(df: DataFrame, k: Int, score: String, tie: String,
+      rankCol: String = "rank", keys: Seq[String] = Seq("qid")): DataFrame =
+    rankBy(df, score, tie, rankCol, keys).filter(col(rankCol) <= k)
+
+  /** IVF cell probe: each query of `q` (qid, qv) scored against the
+    * broadcast centroid table `cent` (g, cv) as `cscore` (raw dot unless
+    * `score` says otherwise), keeping its `nprobe` best cells ranked in
+    * `rankCol` with a (cscore desc, g) tiebreak. */
+  private[graft] def cellProbe(q: DataFrame, cent: DataFrame, nprobe: Int,
+      rankCol: String = "crank",
+      score: Column = VectorFns.dot(col("qv"), col("cv"))): DataFrame =
+    topK(q.crossJoin(broadcast(cent)).withColumn("cscore", score),
+      nprobe, "cscore", "g", rankCol)
+
+  /** k-means data-point init: the first `k` rows' vectors as centroids
+    * g = 0..k−1 (per subspace `keys`), checkpointed. Averaged random
+    * groups collapse every centroid onto the mean; data points start
+    * distinct. */
+  private[graft] def kmSeeds(c: DataFrame, k: Int, keys: Seq[String] = Nil,
+      vecCol: String = "v"): DataFrame =
+    c.filter(col("vec_id") < k)
+      .select(keys.map(col) ++ Seq(col("vec_id").cast("int").as("g"),
+        col(vecCol).as("cv")): _*)
+      .localCheckpoint()
+
+  /** One k-means "M step": mean centroid per cell of `assign`
+    * ((vec_id, keys…, g)), as an ordered ARRAY<DOUBLE> (keys…, g, cv).
+    * Per round ONE (keys, cell, dim)-keyed digest shuffle; vectors never
+    * shuffle. The centroid table is checkpointed, which freezes each
+    * unrolled generation. */
+  private[graft] def kmCentroidsOf(c: DataFrame, assign: DataFrame,
+      keys: Seq[String] = Nil, vecCol: String = "v"): DataFrame = {
+    val cell = keys.map(col) :+ col("g")
+    c.join(assign, "vec_id" +: keys)
+      .select(cell :+ posexplode(col(vecCol)).as(Seq("dim", "x")): _*)
+      .groupBy(cell :+ col("dim"): _*).agg(avg(col("x")).as("cx"))
+      .groupBy(cell: _*)
+      .agg(transform(
+        array_sort(collect_list(struct(col("dim"), col("cx")))),
+        p => p.getField("cx")).as("cv"))
+      .localCheckpoint()
+  }
+
+  /** k-means "E step": inner-product argmax assignment of every vector
+    * (per subspace `keys`) to the broadcast centroid table `cent`,
+    * (score desc, g) tiebreak. Out: (vec_id, keys…, g). */
+  private[graft] def kmAssignTo(c: DataFrame, cent: DataFrame,
+      keys: Seq[String] = Nil, vecCol: String = "v"): DataFrame = {
+    val paired = if (keys.isEmpty) c.crossJoin(broadcast(cent))
+      else c.join(broadcast(cent), keys)
+    topK(paired.withColumn("cs", VectorFns.dot(col(vecCol), col("cv"))),
+        1, "cs", "g", "cr", "vec_id" +: keys)
+      .select((col("vec_id") +: keys.map(col)) :+ col("g"): _*)
+  }
+
   // ---- retrieval (north-star + reference faiss semantics) ----------
 
   /** V3: exact cosine top-k. queries(qid, qvec ARRAY<FLOAT|DOUBLE>),
@@ -355,12 +447,9 @@ object Graft {
       .repartition(col("vec_id")) // materialization barrier
     val q = queries.select(col("qid"), VectorFns.asDouble(col("qvec")).as("qv"))
       .withColumn("q_norm", VectorFns.l2Norm(col("qv")))
-    c.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("score",
-        VectorFns.dot(col("qv"), col("v")) / (col("q_norm") * col("v_norm")))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-      .filter(col("rank") <= k)
+    topK(scoredPairs(c, q,
+        VectorFns.dot(col("qv"), col("v")) / (col("q_norm") * col("v_norm"))),
+        k, "score", "vec_id")
       .select(col("qid"), col("rank"), col("vec_id"), col("score"))
   }
 
@@ -372,10 +461,7 @@ object Graft {
   def annTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("vec_id"), VectorFns.asDouble(col("embedding")).as("v"))
     val q = queries.select(col("qid"), VectorFns.asDouble(col("qvec")).as("qv"))
-    graft.operators.RetrievalOps.lshScoredCandidates(q, c)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-      .filter(col("rank") <= k)
+    topK(graft.operators.RetrievalOps.lshScoredCandidates(q, c), k, "score", "vec_id")
       .select(col("qid"), col("rank"), col("vec_id"), col("score"))
   }
 
@@ -662,7 +748,7 @@ object Graft {
       .select(col("term"),
         floor(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) * 1e6 + 0.5)
           .as("idf_e6"))
-    tf.join(broadcast(q), "term")
+    val scored = tf.join(broadcast(q), "term")
       .join(broadcast(idf), "term")
       .join(dl, "doc_id")
       .crossJoin(broadcast(stats.select(col("avgdl"))))
@@ -672,9 +758,7 @@ object Graft {
               1e6 + 0.5))
       .groupBy(col("qid"), col("doc_id"))
       .agg(sum(col("w_e12")).as("score_e12"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("score_e12").desc, col("doc_id"))))
-      .filter(col("rank") <= k)
+    topK(scored, k, "score_e12", "doc_id")
       .select(col("qid"), col("rank"), col("doc_id"), col("score_e12"))
   }
 
@@ -1826,12 +1910,11 @@ object Graft {
       s"lambdaTenths in [1,9]: $lambdaTenths")
     val (lam, lamC) = (lambdaTenths.toLong, 10L - lambdaTenths)
     val q = queries.select(col(qidCol).as("__qid"), col(qvecCol).as("__qv"))
-    val byRel = Window.partitionBy(col("__qid")).orderBy(desc("__rel"), col("__id"))
-    val cand = corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
-      .join(broadcast(q), col("__id") =!= col("__qid"))
-      .withColumn("__rel", floor(VectorFns.dot(col("__qv"), col("__v")) * 1e6 + 0.5).cast("long"))
-      .withColumn("__rk", row_number().over(byRel))
-      .filter(col("__rk") <= poolK)
+    val perQuery = Seq("__qid")
+    val cand = topK(corpus.select(col(idCol).as("__id"), col(vecCol).as("__v"))
+        .join(broadcast(q), col("__id") =!= col("__qid"))
+        .withColumn("__rel", floor(VectorFns.dot(col("__qv"), col("__v")) * 1e6 + 0.5).cast("long")),
+        poolK, "__rel", "__id", "__rk", perQuery)
       .select(col("__qid"), col("__id"), col("__v"), col("__rel"))
       .localCheckpoint() // k self-joins below; bound the replanned lineage
     val pairs = cand.select(col("__qid"), col("__id").as("__a"), col("__v").as("__va"))
@@ -1840,9 +1923,7 @@ object Graft {
       .select(col("__qid"), col("__a"), col("__b"),
               floor(VectorFns.dot(col("__va"), col("__vb")) * 1e6 + 0.5).cast("long").as("__sim"))
       .localCheckpoint()
-    val byMmr = Window.partitionBy(col("__qid")).orderBy(desc("__mmr"), col("__id"))
-    var out = cand.withColumn("__mmr", col("__rel") * 10)
-      .withColumn("__r", row_number().over(byMmr)).filter(col("__r") === 1)
+    var out = topK(cand.withColumn("__mmr", col("__rel") * 10), 1, "__mmr", "__id", "__r", perQuery)
       .select(col("__qid"), lit(1L).as("pos"), col("__id"), col("__mmr"))
     for (p <- 2 to k) {
       val sel = out.select(col("__qid"), col("__id").as("__selid"))
@@ -1852,11 +1933,11 @@ object Graft {
         .groupBy(col("__qid"), col("__a")).agg(max(col("__sim")).as("__maxsim"))
       val rest = cand.join(out.select(col("__qid"), col("__id")),
                            Seq("__qid", "__id"), "left_anti")
-      val pick = rest.join(maxSim,
+      val scored = rest.join(maxSim,
           rest("__qid") === maxSim("__qid") && rest("__id") === maxSim("__a"))
         .select(rest("__qid"), col("__id"), col("__rel"), col("__maxsim"))
         .withColumn("__mmr", col("__rel") * lam - col("__maxsim") * lamC)
-        .withColumn("__r", row_number().over(byMmr)).filter(col("__r") === 1)
+      val pick = topK(scored, 1, "__mmr", "__id", "__r", perQuery)
         .select(col("__qid"), lit(p.toLong).as("pos"), col("__id"), col("__mmr"))
       out = out.unionByName(pick).localCheckpoint()
     }

@@ -1,9 +1,10 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Graft.topK
 import graft.functions.TextSignatures
 import graft.functions.VectorFns._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -89,11 +90,6 @@ object LexicalOps {
     graft.api.Graft.bm25RankFromPostings(
       postings(s, dir), docLens(s, dir), queriesDf(s), k, k1 = K1, b = B)
 
-  private def rankTop(df: DataFrame, score: Column, depth: Int): DataFrame =
-    df.withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(score.desc, col("doc_id"))))
-      .filter(col("rank") <= depth)
-
   /** (qid, doc_id, cos_e9): dense leg — single-pass hash embeddings,
     * quantized cosine. The embed is map-side-only on both sides. */
   private def denseScores(s: SparkSession, dir: String): DataFrame = {
@@ -150,13 +146,10 @@ object LexicalOps {
         .join(broadcast(qt), "term")
         .groupBy(col("qid"), col("doc_id"))
         .agg(sum(col("s1_e6")).as("sum1_e6"))
-      s1.join(lens, "doc_id").join(broadcast(nq), "qid")
-        .withColumn("score_e6", col("sum1_e6") + col("n_qterms") *
-          floor(log(lit(100.0) / (col("len") + lit(100L)).cast("double"))
-            * 1e6 + 0.5).cast("long"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("score_e6").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
+      topK(s1.join(lens, "doc_id").join(broadcast(nq), "qid")
+          .withColumn("score_e6", col("sum1_e6") + col("n_qterms") *
+            floor(log(lit(100.0) / (col("len") + lit(100L)).cast("double"))
+              * 1e6 + 0.5).cast("long")), 5, "score_e6", "doc_id")
         .select(col("qid"), col("rank"), col("doc_id"), col("score_e6"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -202,11 +195,9 @@ object LexicalOps {
         .select(col("term"),
           floor(log((col("n") - col("df") + 0.5) / (col("df") + 0.5) + 1.0) * 1e6 + 0.5)
             .as("idf_e6"))
-      val expTerms = fbt.join(broadcast(idf), "term")
-        .select(col("qid"), col("term"), (col("tf") * col("idf_e6")).as("w_e6"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("w_e6").desc, col("term"))))
-        .filter(col("rn") <= 2)
+      val expTerms = topK(fbt.join(broadcast(idf), "term")
+        .select(col("qid"), col("term"), (col("tf") * col("idf_e6")).as("w_e6")),
+        2, "w_e6", "term", "rn")
       val expanded = queriesDf(s)
         .join(expTerms.groupBy(col("qid"))
           .agg(concat_ws(" ", array_sort(collect_list(col("term")))).as("ext")),
@@ -321,16 +312,12 @@ object LexicalOps {
         .select(col("qid"), col("qterm"), col("term"),
           floor(expr("CAST(c0*q0+c1*q1+c2*q2+c3*q3+c4*q4+c5*q5+c6*q6+c7*q7 AS DOUBLE)") /
             (col("norm") * col("qnorm")) * 1e6 + 0.5).cast("long").as("dot_e6"))
-      cand.join(dt, "doc_id")
-        .join(dots, Seq("qid", "term"))
-        .groupBy(col("qid"), col("doc_id"), col("qterm"))
-        .agg(max(col("dot_e6")).as("m"))
-        .groupBy(col("qid"), col("doc_id"))
-        .agg(sum(col("m")).as("maxsim_e6"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid"))
-            .orderBy(col("maxsim_e6").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
+      topK(cand.join(dt, "doc_id")
+          .join(dots, Seq("qid", "term"))
+          .groupBy(col("qid"), col("doc_id"), col("qterm"))
+          .agg(max(col("dot_e6")).as("m"))
+          .groupBy(col("qid"), col("doc_id"))
+          .agg(sum(col("m")).as("maxsim_e6")), 5, "maxsim_e6", "doc_id")
         .select(col("qid"), col("rank"), col("doc_id"), col("maxsim_e6"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -340,15 +327,13 @@ object LexicalOps {
     "retrieval_hybrid_rrf" -> ((s, dir) => {
       val lex = bm25Top(s, dir, FUSE_DEPTH)
         .select(col("qid"), col("doc_id"), col("rank").as("lex_rank"))
-      val den = rankTop(denseScores(s, dir), col("cos_e9"), FUSE_DEPTH)
+      val den = topK(denseScores(s, dir), FUSE_DEPTH, "cos_e9", "doc_id")
         .select(col("qid"), col("doc_id"), col("rank").as("vec_rank"))
-      lex.join(den, Seq("qid", "doc_id"), "full_outer")
-        .withColumn("rrf_e9", floor(
-          (coalesce(lit(1.0) / (lit(RRF_K) + col("lex_rank")), lit(0.0)) +
-           coalesce(lit(1.0) / (lit(RRF_K) + col("vec_rank")), lit(0.0))) * 1e9 + 0.5))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("rrf_e9").desc, col("doc_id"))))
-        .filter(col("rank") <= 10)
+      topK(lex.join(den, Seq("qid", "doc_id"), "full_outer")
+          .withColumn("rrf_e9", floor(
+            (coalesce(lit(1.0) / (lit(RRF_K) + col("lex_rank")), lit(0.0)) +
+             coalesce(lit(1.0) / (lit(RRF_K) + col("vec_rank")), lit(0.0))) * 1e9 + 0.5)),
+          10, "rrf_e9", "doc_id")
         .select(col("qid"), col("rank"), col("doc_id"), col("rrf_e9"),
           coalesce(col("lex_rank"), lit(-1)).as("lex_rank"),
           coalesce(col("vec_rank"), lit(-1)).as("vec_rank"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,14 +82,9 @@ object PipelineOps {
       import graft.functions.VectorFns
       val emb = hashEmbeddings(Tables.documentsSpread(s, dir))
         .repartition(col("doc_id")) // materialize embeddings once
-      val q = emb.filter(col("doc_id") < 3)
-        .select(col("doc_id").as("qid"), col("vec").as("qv"))
-      emb.join(broadcast(q), col("doc_id") =!= col("qid"))
-        .withColumn("score", VectorFns.dot(col("qv"), col("vec")))
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("qid")).orderBy(desc("score"), col("doc_id"))))
-        .filter(col("rank") <= 3)
+      val q = Graft.querySet(emb, 3, Seq(col("vec").as("qv")), idCol = "doc_id")
+      Graft.topK(Graft.scoredPairs(emb, q, VectorFns.dot(col("qv"), col("vec")),
+          idCol = "doc_id"), 3, "score", "doc_id")
         .select(col("qid"), col("rank"), col("doc_id").as("match_id"),
                 floor(col("score") * 1e6 + 0.5).cast("long").as("score_e6"))
         .orderBy(col("qid"), col("rank"))

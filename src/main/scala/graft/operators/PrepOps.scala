@@ -97,15 +97,12 @@ object PrepOps {
       val qv = LexicalOps.queriesDf(s)
         .select(col("qid"), graft.functions.TextSignatures.hashEmbed8(col("qtext")).as("qv"))
       import graft.functions.VectorFns.{dot, l2Norm}
-      cv.crossJoin(broadcast(qv))
-        .select(col("qid"), col("doc_id"),
-          floor(dot(col("qv"), col("cv")) / (l2Norm(col("qv")) * l2Norm(col("cv"))) * 1e9 + 0.5)
-            .cast("long").as("cos_e9"))
-        .groupBy(col("qid"), col("doc_id"))
-        .agg(max(col("cos_e9")).as("best_cos_e9"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(col("best_cos_e9").desc, col("doc_id"))))
-        .filter(col("rank") <= 5)
+      graft.api.Graft.topK(cv.crossJoin(broadcast(qv))
+          .select(col("qid"), col("doc_id"),
+            floor(dot(col("qv"), col("cv")) / (l2Norm(col("qv")) * l2Norm(col("cv"))) * 1e9 + 0.5)
+              .cast("long").as("cos_e9"))
+          .groupBy(col("qid"), col("doc_id"))
+          .agg(max(col("cos_e9")).as("best_cos_e9")), 5, "best_cos_e9", "doc_id")
         .select(col("qid"), col("rank"), col("doc_id"), col("best_cos_e9"))
         .orderBy(col("qid"), col("rank"))
     }),

@@ -1,10 +1,11 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Graft.{cellProbe, kmAssignTo, kmCentroidsOf, kmSeeds, notSelf, querySet,
+  rankBy, scoredPairs, topK}
 import graft.functions.VectorFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Embedding & retrieval operators (SURVEY.md §2.9, reference
   * `embedding_engine.py`): L2 normalization (C15), the flat
@@ -33,6 +34,14 @@ import org.apache.spark.sql.expressions.Window
   *    over B(B+1)/2 bounded-memory tasks (LSH has no selectivity at the
   *    τ=0.4 threshold on this data; see the query's comment). Blocked
   *    approximate variants live in DedupOps.
+  *
+  * Every search here runs on the shared retrieval kernels in
+  * `api/Graft.scala`: `querySet` (the probe queries), `scoredPairs` (the
+  * broadcast query set against the corpus, self pairs dropped),
+  * `topK`/`rankBy` (the per-query rank, (score desc, id) tiebreak),
+  * `cellProbe` (the IVF centroid probe) and `kmSeeds`/`kmAssignTo`/
+  * `kmCentroidsOf` (the k-means step). Each query keeps its own score
+  * expression, rounding, tie column and output names.
   */
 object RetrievalOps {
 
@@ -95,9 +104,8 @@ object RetrievalOps {
     val qProbes = addDots(queries, "qv", Seq(col("qid"), col("qv")))
       .select(col("qid"), col("qv"), explode(array(probes: _*)).as("tb"))
       .select(col("qid"), col("qv"), col("tb.t").as("t"), col("tb.bkt").as("bkt"))
-    cSide.join(broadcast(qProbes), Seq("t", "bkt"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("score", dot(col("qv"), col("v")))
+    scoredPairs(cSide.join(broadcast(qProbes), Seq("t", "bkt")),
+        dot(col("qv"), col("v")), "score")
       .groupBy(col("qid"), col("vec_id"))          // dedup multi-table hits
       .agg(max(col("score")).as("score"))          // identical per dup
   }
@@ -117,30 +125,6 @@ object RetrievalOps {
     graft.api.Graft.memoizedExchange("retrieval_corpus_mat", s, dir) {
       corpus(s, dir).repartition(col("vec_id"))
     }
-
-  /** One k-means "M step": mean centroid per cell of `assign`
-    * ((vec_id, g)), as an ordered ARRAY<DOUBLE> (g, cv). Per round ONE
-    * (cell, dim)-keyed digest shuffle (64 rows/vector); vectors never
-    * shuffle. Shared by ann_ivf_topk / dedup_semantic /
-    * v_ivf_balance_audit (ann_pq_topk keeps the per-subspace variant). */
-  private def kmCentroidsOf(c: DataFrame, assign: DataFrame): DataFrame =
-    c.join(assign, "vec_id")
-      .select(col("g"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("g"), col("dim")).agg(avg(col("x")).as("cx"))
-      .groupBy(col("g"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cx")))),
-        p => p.getField("cx")).as("cv"))
-      .localCheckpoint()
-
-  /** k-means "E step": inner-product argmax assignment of every corpus
-    * vector to a broadcast centroid table, (score desc, g) tiebreak. */
-  private def kmAssignTo(c: DataFrame, cent: DataFrame): DataFrame =
-    c.crossJoin(broadcast(cent))
-      .withColumn("cs", dot(col("v"), col("cv")))
-      .withColumn("cr", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(desc("cs"), col("g"))))
-      .filter(col("cr") === 1).select(col("vec_id"), col("g"))
 
   /** The IVF coarse quantizer (init = vec_id % 8, two unrolled Lloyd
     * refinements) as the session-shared k = 8 model (r10 family sweep):
@@ -208,28 +192,16 @@ object RetrievalOps {
   private def nprobeCurveBuild(s: SparkSession, dir: String): DataFrame = {
     val c = corpusMat(s, dir)
     val (cent2, lists) = ivfModel8(s, dir)
-    val q = c.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val cr = q.crossJoin(broadcast(cent2))
-      .withColumn("cscore", dot(col("qv"), col("cv")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(desc("cscore"), col("g"))))
-      .filter(col("crank") <= 4)
+    val q = querySet(c, 5)
+    val cr = cellProbe(q, cent2, 4)
       .select(col("qid"), col("qv"), col("g"), col("crank"))
-    val exact = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("score", dot(col("qv"), col("v")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-      .filter(col("rk") <= 3).select(col("qid"), col("vec_id"))
-    val cand = c.join(lists, "vec_id").join(broadcast(cr), Seq("g"))
-      .filter(col("vec_id") =!= col("qid"))
-      .withColumn("score", dot(col("qv"), col("v")))
+    val exact = topK(scoredPairs(c, q, dot(col("qv"), col("v"))), 3, "score", "vec_id", "rk")
+      .select(col("qid"), col("vec_id"))
+    val cand = scoredPairs(c.join(lists, "vec_id").join(broadcast(cr), Seq("g")),
+        dot(col("qv"), col("v")), "score")
       .select(col("qid"), col("vec_id"), col("score"), col("crank"))
       .withColumn("np", explode(sequence(col("crank"), lit(4))))
-    val ivf3 = cand.withColumn("rk", row_number().over(
-        Window.partitionBy(col("np"), col("qid"))
-          .orderBy(desc("score"), col("vec_id"))))
-      .filter(col("rk") <= 3)
+    val ivf3 = topK(cand, 3, "score", "vec_id", "rk", Seq("np", "qid"))
     val hits = ivf3.join(exact, Seq("qid", "vec_id"), "left_semi")
       .groupBy(col("np")).agg(count(lit(1)).as("n_hits"))
     val sizes = lists.groupBy(col("g")).agg(count(lit(1)).as("cell_n"))
@@ -274,19 +246,15 @@ object RetrievalOps {
     // touched only by the initial top-8 scan.
     "retrieval_mmr_rerank" -> ((s, dir) => {
       val c = corpus(s, dir)
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val byRel = Window.partitionBy(col("qid"))
-        .orderBy(desc("rel_e6"), col("vec_id"))
+      val q = querySet(c, 5)
       // PINNED (r15 opt, guide §2.4/§5): the candidate table is consumed
       // by `pairs` (both sides), s1, rest2, rest3 — without the cut every
       // consumer re-runs the corpus×queries score + top-8 window (the
       // physical plan held 6 copies of the corpus scan for a 40-row
       // table). Both pins are |q|·8-bounded, lazy, inside the timed query.
-      val cand = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("rel_e6", floor(dot(col("qv"), col("v")) * 1e6 + 0.5).cast("long"))
-        .withColumn("rk", row_number().over(byRel))
-        .filter(col("rk") <= 8)
+      val cand = topK(scoredPairs(c, q,
+          floor(dot(col("qv"), col("v")) * 1e6 + 0.5).cast("long"), "rel_e6"),
+          8, "rel_e6", "vec_id", "rk")
         .select(col("qid"), col("vec_id"), col("v"), col("rel_e6"))
         .localCheckpoint(false)
       val pairs = cand.select(col("qid"), col("vec_id").as("a_id"), col("v").as("va"))
@@ -303,7 +271,7 @@ object RetrievalOps {
           col("qid") === col("pq") && col("vec_id") === col("a_id") &&
             col(selCol) === col("b_id"))
           .drop("pq", "a_id", "b_id")
-      val s1 = cand.withColumn("r", row_number().over(byRel)).filter(col("r") === 1)
+      val s1 = topK(cand, 1, "rel_e6", "vec_id", "r")
         .select(col("qid"), col("vec_id").as("s1_id"), (col("rel_e6") * 10).as("mmr10_e6"))
       val rest2 = simTo(
         cand.join(s1.select(col("qid"), col("s1_id")), Seq("qid"))
@@ -311,8 +279,7 @@ object RetrievalOps {
         .withColumn("mmr10_e6", col("rel_e6") * 7 - col("sim1") * 3)
         // consumed by s2 AND rest3 — pin the ≤|q|·7-row step frame too
         .localCheckpoint(false)
-      val byMmr = Window.partitionBy(col("qid")).orderBy(desc("mmr10_e6"), col("vec_id"))
-      val s2 = rest2.withColumn("r", row_number().over(byMmr)).filter(col("r") === 1)
+      val s2 = topK(rest2, 1, "mmr10_e6", "vec_id", "r")
         .select(col("qid"), col("vec_id").as("s2_id"), col("mmr10_e6"))
       val rest3 = simTo(
         rest2.drop("mmr10_e6", "sim1").join(s2.select(col("qid"), col("s2_id")), Seq("qid"))
@@ -320,7 +287,7 @@ object RetrievalOps {
       val rest3b = simTo(rest3, "s1_id", "sim1b")
         .withColumn("mmr10_e6",
           col("rel_e6") * 7 - greatest(col("sim1b"), col("sim2")) * 3)
-      val s3 = rest3b.withColumn("r", row_number().over(byMmr)).filter(col("r") === 1)
+      val s3 = topK(rest3b, 1, "mmr10_e6", "vec_id", "r")
         .select(col("qid"), col("vec_id").as("s3_id"), col("mmr10_e6"))
       s1.select(col("qid"), lit(1L).as("pos"), col("s1_id").as("vec_id"), col("mmr10_e6"))
         .unionByName(s2.select(col("qid"), lit(2L).as("pos"), col("s2_id").as("vec_id"), col("mmr10_e6")))
@@ -332,13 +299,7 @@ object RetrievalOps {
     // corpus dot product + per-query window top-k (k=3).
     "v3_cosine_topk" -> ((s, dir) => {
       val c = corpus(s, dir)
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      c.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("score", dot(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      topK(scoredPairs(c, querySet(c, 5), dot(col("qv"), col("v"))), 3, "score", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -355,19 +316,14 @@ object RetrievalOps {
     // shuffle both halve if recall holds.
     "ann_truncated_recall" -> ((s, dir) => {
       val cd = corpusMat(s, dir)
-      val q = cd.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
       val k = 10
-      val scored = cd.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("s_full",
-          floor(dot(col("qv"), col("v")) * 1e6 + 0.5).cast("long"))
+      val pairs = scoredPairs(cd, querySet(cd, 5),
+          floor(dot(col("qv"), col("v")) * 1e6 + 0.5).cast("long"), "s_full")
         .withColumn("s_half",
           floor(dot(slice(col("qv"), 1, 32), slice(col("v"), 1, 32)) * 1e6 + 0.5)
             .cast("long"))
-        .withColumn("r_full", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("s_full"), col("vec_id"))))
-        .withColumn("r_half", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("s_half"), col("vec_id"))))
+      val scored = rankBy(rankBy(pairs, "s_full", "vec_id", "r_full"),
+        "s_half", "vec_id", "r_half")
       scored.groupBy(col("qid"))
         .agg(sum(when(col("r_full") <= k && col("r_half") <= k, 1L)
                .otherwise(0L)).as("n_overlap"))
@@ -385,10 +341,8 @@ object RetrievalOps {
       val topk = udaf(new graft.functions.TopKAgg(3),
         org.apache.spark.sql.Encoders.product[(Double, Long)])
       val c = corpus(s, dir)
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      c.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), dot(col("qv"), col("v")).as("score"))
+      scoredPairs(c, querySet(c, 5), dot(col("qv"), col("v")))
+        .select(col("qid"), col("vec_id"), col("score"))
         .groupBy(col("qid")).agg(topk(col("score"), col("vec_id")).as("tk"))
         .select(col("qid"), posexplode(col("tk")))
         .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
@@ -406,14 +360,10 @@ object RetrievalOps {
       val c = corpus(s, dir)
       val main = c.filter(col("vec_id") % 10 =!= 9)
       val delta = c.filter(col("vec_id") % 10 === 9)
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val deltaScored = delta.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), dot(col("qv"), col("v")).as("score"))
-      lshScoredCandidates(q, main).union(deltaScored)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      val q = querySet(c, 5)
+      val deltaScored = scoredPairs(delta, q, dot(col("qv"), col("v")))
+        .select(col("qid"), col("vec_id"), col("score"))
+      topK(lshScoredCandidates(q, main).union(deltaScored), 3, "score", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -422,12 +372,7 @@ object RetrievalOps {
     // Graft.annTopK facade via lshScoredCandidates).
     "ann_lsh_topk" -> ((s, dir) => {
       val c = corpus(s, dir)
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      lshScoredCandidates(q, c)
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      topK(lshScoredCandidates(querySet(c, 5), c), 3, "score", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -456,20 +401,10 @@ object RetrievalOps {
       // assignment pass streams — the same two plan shapes.
       val c = corpusMat(s, dir) // reused by every pass: cast + exchange once
       val (cent2, lists) = ivfModel8(s, dir)
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val probed = q.crossJoin(broadcast(cent2))
-        .withColumn("cscore", dot(col("qv"), col("cv")))
-        .withColumn("crank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("cscore"), col("g"))))
-        .filter(col("crank") <= 3) // nprobe = 3
+      val probed = cellProbe(querySet(c, 5), cent2, 3) // nprobe = 3
         .select(col("qid"), col("qv"), col("g"))
-      c.join(lists, "vec_id").join(broadcast(probed), Seq("g"))
-        .filter(col("vec_id") =!= col("qid"))
-        .withColumn("score", dot(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      topK(scoredPairs(c.join(lists, "vec_id").join(broadcast(probed), Seq("g")),
+          dot(col("qv"), col("v")), "score"), 3, "score", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -510,34 +445,26 @@ object RetrievalOps {
       // session-memoized like the model they derive from — the n²/k
       // cell-blocked build runs once per (session, dir), not per pass.
       val med = graft.api.Graft.memoizedExchange("ann_beam_medoids", s, dir) {
-        c.join(lists, "vec_id").join(broadcast(cent2), "g")
-          .withColumn("ms", dotE6(col("v"), col("cv")))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("g")).orderBy(desc("ms"), col("vec_id"))))
-          .filter(col("rk") === 1).select(col("g"), col("vec_id"))
+        topK(c.join(lists, "vec_id").join(broadcast(cent2), "g")
+            .withColumn("ms", dotE6(col("v"), col("cv"))), 1, "ms", "vec_id", "rk", Seq("g"))
+          .select(col("g"), col("vec_id"))
       }
       val adj = graft.api.Graft.memoizedExchange("ann_beam_adjacency", s, dir) {
         // consumed on both self-join sides: materialize once
         val cl = c.join(lists, "vec_id")
           .select(col("vec_id"), col("v"), col("g")).localCheckpoint()
-        val adjCell = cl.as("a").join(cl.as("b"),
+        val adjCell = topK(cl.as("a").join(cl.as("b"),
             col("a.g") === col("b.g") && col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
-                  dotE6(col("a.v"), col("b.v")).as("s_e6"))
-          .withColumn("rk", row_number().over(
-            Window.partitionBy(col("src")).orderBy(desc("s_e6"), col("dst"))))
-          .filter(col("rk") <= 3).select(col("src"), col("dst"))
+                  dotE6(col("a.v"), col("b.v")).as("s_e6")), 3, "s_e6", "dst", "rk", Seq("src"))
+          .select(col("src"), col("dst"))
         val medAdj = med.as("m1").join(med.as("m2"), col("m1.g") =!= col("m2.g"))
           .select(col("m1.vec_id").as("src"), col("m2.vec_id").as("dst"))
         adjCell.union(medAdj).distinct()
       }
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      val beam0 = q.crossJoin(broadcast(cent2))
-        .withColumn("cs", dotE6(col("qv"), col("cv")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("cs"), col("g"))))
-        .filter(col("rk") === 1).select(col("qid"), col("g"))
+      val q = querySet(c, 5)
+      val beam0 = cellProbe(q, cent2, 1, "rk", dotE6(col("qv"), col("cv")))
+        .select(col("qid"), col("g"))
         .join(med, "g").select(col("qid"), col("vec_id"))
       // one hop, split into expand (score the frontier — the "visited"
       // ledger) and keep-top-B. Each expansion is localCheckpointed
@@ -560,26 +487,21 @@ object RetrievalOps {
       // per-width chain saw (oracle unchanged, gate-verified).
       import s.implicits._
       val widths = Seq(2L, 4L, 8L).toDF("bw")
-      val wKeep = Window.partitionBy(col("bw"), col("qid"))
-        .orderBy(desc("s_e6"), col("vec_id"))
+      val perWidth = Seq("bw", "qid")
       def expandW(beam: DataFrame): DataFrame =
-        beam.union(beam.join(adj, beam("vec_id") === adj("src"))
+        scoredPairs(beam.union(beam.join(adj, beam("vec_id") === adj("src"))
             .select(col("bw"), col("qid"), col("dst").as("vec_id")))
           .distinct()
-          .join(c, "vec_id").join(broadcast(q), "qid")
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("bw"), col("qid"), col("vec_id"),
-                  dotE6(col("qv"), col("v")).as("s_e6"))
+          .join(c, "vec_id").join(broadcast(q), "qid"), dotE6(col("qv"), col("v")), "s_e6")
+          .select(col("bw"), col("qid"), col("vec_id"), col("s_e6"))
           .localCheckpoint(false)
       def keepW(cand: DataFrame): DataFrame =
-        cand.withColumn("rk", row_number().over(wKeep))
+        rankBy(cand, "s_e6", "vec_id", "rk", perWidth)
           .filter(col("rk") <= col("bw"))
           .select(col("bw"), col("qid"), col("vec_id"))
-      val exact = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("s_e6", dotE6(col("qv"), col("v")))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("s_e6"), col("vec_id"))))
-        .filter(col("rk") <= 3).select(col("qid"), col("vec_id"))
+      val exact = topK(scoredPairs(c, q, dotE6(col("qv"), col("v")), "s_e6"),
+          3, "s_e6", "vec_id", "rk")
+        .select(col("qid"), col("vec_id"))
       val n = c.agg(count(lit(1)).as("n_corpus"))
       // hop-1 expansion is width-independent (beam0 is one entry/query):
       // computed once, then replicated onto the 3-row width table
@@ -588,8 +510,7 @@ object RetrievalOps {
       val c2 = expandW(keepW(c1))
       val c3 = expandW(keepW(c2))
       val visited = c1.union(c2).union(c3).distinct() // scores re-agree
-      val top3 = visited.withColumn("rk", row_number().over(wKeep))
-        .filter(col("rk") <= 3)
+      val top3 = topK(visited, 3, "s_e6", "vec_id", "rk", perWidth)
       val hits = top3.join(exact, Seq("qid", "vec_id"), "left_semi")
         .groupBy(col("bw"), col("qid")).agg(count(lit(1)).as("n_hits"))
       visited.groupBy(col("bw"), col("qid")).agg(count(lit(1)).as("n_visited"))
@@ -674,17 +595,12 @@ object RetrievalOps {
       val d1 = kmCentroidsOf(rframe, kmAssignTo(rframe, d0))
       val codes2 = kmAssignTo(rframe, d1)
         .select(col("vec_id"), col("g").as("g2"))
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
-      resid.select(col("vec_id"), col("g1")).join(codes2, "vec_id")
-        .crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("qid"))
+      val cand = resid.select(col("vec_id"), col("g1")).join(codes2, "vec_id")
+        .crossJoin(broadcast(querySet(c, 5)))
         .join(broadcast(cent1.select(col("g").as("g1"), col("cv").as("c1v"))), "g1")
         .join(broadcast(d1.select(col("g").as("g2"), col("cv").as("c2v"))), "g2")
-        .withColumn("score", dot(col("qv"), col("c1v")) + dot(col("qv"), col("c2v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      topK(scoredPairs(cand, dot(col("qv"), col("c1v")) + dot(col("qv"), col("c2v")), "score"),
+          3, "score", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"),
                 round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
@@ -723,32 +639,17 @@ object RetrievalOps {
           struct(lit(m).as("m"), slice(col("v"), m * SUB + 1, SUB).as("sv"))): _*)).as("p"))
         .select(col("vec_id"), col("p.m").as("m"), col("p.sv").as("sv"))
         .repartition(col("vec_id")))
-      def centroidsOf(assign: DataFrame): DataFrame = sub.join(assign, Seq("vec_id", "m"))
-        .select(col("m"), col("g"), posexplode(col("sv")).as(Seq("dim", "x")))
-        .groupBy(col("m"), col("g"), col("dim")).agg(avg(col("x")).as("cx"))
-        .groupBy(col("m"), col("g"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cx")))),
-          p => p.getField("cx")).as("cv"))
-        .localCheckpoint() // ≤ M·K rows; freezes each k-means generation
-      def assignTo(cent: DataFrame): DataFrame = sub.join(broadcast(cent), Seq("m"))
-        .withColumn("cs", dot(col("sv"), col("cv")))
-        .withColumn("cr", row_number().over(
-          Window.partitionBy(col("vec_id"), col("m")).orderBy(desc("cs"), col("g"))))
-        .filter(col("cr") === 1).select(col("vec_id"), col("m"), col("g"))
+      // k-means per subspace m: ≤ M·K centroid rows per generation
+      def centroidsOf(assign: DataFrame) = kmCentroidsOf(sub, assign, Seq("m"), "sv")
+      def assignTo(cent: DataFrame) = kmAssignTo(sub, cent, Seq("m"), "sv")
       // Init = K actual sub-vectors (vec_id < K), NOT mod-K group
-      // means: averaging random groups collapses every centroid onto
-      // the subspace mean (measured recall 0.07/0.00 — the same
-      // degeneracy the r3 IVF quantizer had), while data-point seeds
-      // start distinct and Lloyd refinement separates them further.
-      val cent0 = sub.filter(col("vec_id") < K)
-        .select(col("m"), col("vec_id").cast("int").as("g"), col("sv").as("cv"))
-        .localCheckpoint()
+      // means (measured recall 0.07/0.00 — the same degeneracy the r3
+      // IVF quantizer had).
+      val cent0 = kmSeeds(sub, K, Seq("m"), "sv")
       val cent1 = centroidsOf(assignTo(cent0))
       val cent2 = centroidsOf(assignTo(cent1))
       val codes = assignTo(cent2) // the PQ-encoded corpus
-      val q = c.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qv"))
+      val q = querySet(c, 5)
       val qsub = q.select(col("qid"), explode(array((0 until M).map(m =>
           struct(lit(m).as("m"), slice(col("qv"), m * SUB + 1, SUB).as("qsv"))): _*)).as("p"))
         .select(col("qid"), col("p.m").as("m"), col("p.qsv").as("qsv"))
@@ -760,18 +661,13 @@ object RetrievalOps {
       // faiss's refine stage — the compressed-domain pass only prunes
       // 2000 → 20 and the final order is computed on true vectors.
       // The re-rank join touches 20·|Q| vectors, not the corpus.
-      val shortlist = codes.join(broadcast(lut), Seq("m", "g"))
-        .filter(col("vec_id") =!= col("qid"))
-        .groupBy(col("qid"), col("vec_id")).agg(sum(col("partial")).as("adc"))
-        .withColumn("crank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("adc"), col("vec_id"))))
-        .filter(col("crank") <= 20)
+      val shortlist = topK(codes.join(broadcast(lut), Seq("m", "g"))
+          .filter(notSelf())
+          .groupBy(col("qid"), col("vec_id")).agg(sum(col("partial")).as("adc")),
+          20, "adc", "vec_id", "crank")
         .select(col("qid"), col("vec_id"))
-      shortlist.join(c, "vec_id").join(broadcast(q), Seq("qid"))
-        .withColumn("score", dot(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      topK(shortlist.join(c, "vec_id").join(broadcast(q), Seq("qid"))
+          .withColumn("score", dot(col("qv"), col("v"))), 3, "score", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -795,11 +691,8 @@ object RetrievalOps {
     "dedup_semantic" -> ((s, dir) => {
       val K = 8
       val c = corpusMat(s, dir)
-      val cent0 = c.filter(col("vec_id") < K)
-        .select(col("vec_id").cast("int").as("g"), col("v").as("cv"))
-        .localCheckpoint()
       val cent2 = kmCentroidsOf(c,
-        kmAssignTo(c, kmCentroidsOf(c, kmAssignTo(c, cent0))))
+        kmAssignTo(c, kmCentroidsOf(c, kmAssignTo(c, kmSeeds(c, K)))))
       val m = c.join(kmAssignTo(c, cent2), "vec_id")
       val pruned = m.as("a").join(m.as("b"),
           col("a.g") === col("b.g") && col("a.vec_id") < col("b.vec_id") &&
@@ -974,19 +867,10 @@ object RetrievalOps {
       // set AND the scored scan — un-pinned both consumers replayed the
       // corpus⋈labels join (8 ledger scans between the two eval keys).
       val c = corpus(s, dir).join(lab, "vec_id").localCheckpoint(false)
-      val q = c.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-                col("label").as("actual"))
-      val nn = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("score", dot(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 5)
-      nn.groupBy(col("qid"), col("actual"), col("label"))
-        .agg(count(lit(1)).as("nv"))
-        .withColumn("vr", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("nv"), col("label"))))
-        .filter(col("vr") === 1)
+      val q = querySet(c, 50, Seq(col("v").as("qv"), col("label").as("actual")))
+      val nn = topK(scoredPairs(c, q, dot(col("qv"), col("v"))), 5, "score", "vec_id")
+      topK(nn.groupBy(col("qid"), col("actual"), col("label"))
+          .agg(count(lit(1)).as("nv")), 1, "nv", "label", "vr")
         .withColumnRenamed("label", "predicted")
         .groupBy(col("actual"))
         .agg(count(lit(1)).as("n_queries"),
@@ -1013,14 +897,8 @@ object RetrievalOps {
       // set AND the scored scan — un-pinned both consumers replayed the
       // corpus⋈labels join (8 ledger scans between the two eval keys).
       val c = corpus(s, dir).join(lab, "vec_id").localCheckpoint(false)
-      val q = c.filter(col("vec_id") < 50)
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-                col("label").as("actual"))
-      val top = c.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("score", dot(col("qv"), col("v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 10)
+      val q = querySet(c, 50, Seq(col("v").as("qv"), col("label").as("actual")))
+      val top = topK(scoredPairs(c, q, dot(col("qv"), col("v"))), 10, "score", "vec_id")
         .withColumn("rel", when(col("label") === col("actual"), 1L).otherwise(0L))
         .withColumn("disc_e6",
           floor(lit(1e6) * log(lit(2.0)) / log(col("rank") + lit(1)) + lit(0.5))
@@ -1061,15 +939,9 @@ object RetrievalOps {
       val qd = graft.api.Graft.quantizeInt8(corpus(s, dir), "v", "qv")
         .select(col("vec_id"), col("qv"))
         .repartition(col("vec_id")) // materialize quantized vectors once
-      val q = qd.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("qv").as("qq"))
-      qd.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("iscore",
-          aggregate(zip_with(col("qq"), col("qv"), (a, b) => a * b),
-                    lit(0L), (acc, y) => acc + y))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("iscore"), col("vec_id"))))
-        .filter(col("rank") <= 3)
+      val q = querySet(qd, 5, Seq(col("qv").as("qq")))
+      topK(scoredPairs(qd, q, aggregate(zip_with(col("qq"), col("qv"), (a, b) => a * b),
+          lit(0L), (acc, y) => acc + y), "iscore"), 3, "iscore", "vec_id")
         .select(col("qid"), col("rank"), col("vec_id"), col("iscore"))
         .orderBy(col("qid"), col("rank"))
     }),
@@ -1085,19 +957,10 @@ object RetrievalOps {
       val qd = graft.api.Graft.quantizeInt8(corpus(s, dir), "v", "qv8")
         .select(col("vec_id"), col("v"), col("qv8"))
         .repartition(col("vec_id")) // materialize quantized vectors once
-      val q = qd.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("v").as("qfull"), col("qv8").as("qq"))
-      qd.join(broadcast(q), col("vec_id") =!= col("qid"))
-        .withColumn("iscore",
-          aggregate(zip_with(col("qq"), col("qv8"), (a, b) => a * b),
-                    lit(0L), (acc, y) => acc + y))
-        .withColumn("crank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("iscore"), col("vec_id"))))
-        .filter(col("crank") <= 20) // stage-1 candidates
-        .withColumn("score", dot(col("qfull"), col("v")))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("qid")).orderBy(desc("score"), col("vec_id"))))
-        .filter(col("rank") <= 3)   // stage-2 exact re-rank
+      val q = querySet(qd, 5, Seq(col("v").as("qfull"), col("qv8").as("qq")))
+      val stage1 = topK(scoredPairs(qd, q, aggregate(zip_with(col("qq"), col("qv8"),
+          (a, b) => a * b), lit(0L), (acc, y) => acc + y), "iscore"), 20, "iscore", "vec_id", "crank")
+      topK(stage1.withColumn("score", dot(col("qfull"), col("v"))), 3, "score", "vec_id") // exact re-rank
         .select(col("qid"), col("rank"), col("vec_id"), round(col("score"), 6).as("score"))
         .orderBy(col("qid"), col("rank"))
     }),

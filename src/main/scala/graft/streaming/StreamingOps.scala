@@ -127,7 +127,7 @@ object StreamingOps {
     * watermark-sensitive queries returned wrong answers while the
     * time-insensitive ones kept passing). */
   private[graft] def eventsStream(s: SparkSession, dir: String, maxFiles: Int): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the schema probe sets the read conf through Tables.ensureEventsReadConf
     val raw = s.readStream
       .schema(graft.Tables.eventsRawSchema(s, dir)) // footer-probed, never assumed
       .option("maxFilesPerTrigger", maxFiles) // T3 micro-batch sizing
@@ -173,34 +173,43 @@ object StreamingOps {
     finally org.apache.commons.io.FileUtils.deleteQuietly(dir): Unit
   }
 
+  /** Held while a drain's width is on the shared session. */
+  private val drainStartLock = new Object
+
   /** drain + the finished StreamingQuery handle — for the monitor
     * queries that read the engine's own progress objects
     * (recentProgress) rather than the sink table. One copy of the
-    * sink/checkpoint/trigger/conf-restore recipe for all drains. */
-  private def drainWithHandle(s: SparkSession, df: DataFrame,
+    * sink/checkpoint/trigger/width recipe for all drains. */
+  private[graft] def drainWithHandle(s: SparkSession, df: DataFrame,
       mode: String): (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     val name = "graft_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // Stateful operators materialize 1-4 state stores PER shuffle
-    // partition (a stream-stream join: keyToNumValues +
-    // keyWithIndexToValue × both sides), each paying per-batch
-    // commit+maintenance; [[drainParts]] holds that count. The stream
-    // reads the conf at start(); the session value is restored right
-    // after, so the post-drain batch aggregate runs at full width.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", drainParts.toString)
-    try withDrainCheckpoint(name) { ckpt =>
-    val q = df.writeStream
-      .outputMode(mode).format("memory").queryName(name)
-      // state-store + offset-log commits fsync per partition per batch;
-      // on this host's /tmp that is the same ~400 ms-class latency floor
-      // measured for shuffle files (BENCH_NOTES §r5), so the
-      // checkpoint goes on the same fast local dir the shuffle uses.
-      // One-shot oracle drains never restart, so durability is moot.
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    (s.table(name), q)
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    withDrainCheckpoint(name) { ckpt =>
+      // Stateful operators materialize 1-4 state stores PER shuffle
+      // partition (a stream-stream join: keyToNumValues +
+      // keyWithIndexToValue × both sides), each paying per-batch
+      // commit+maintenance; [[drainParts]] holds that count. A stream
+      // copies the session's conf when it starts, so the width is on
+      // the shared session only for start(), under one lock: drains
+      // that overlap never save each other's width, and batch queries
+      // plan at the session's own width while a drain runs.
+      val q = drainStartLock.synchronized {
+        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+        s.conf.set("spark.sql.shuffle.partitions", drainParts.toString)
+        try df.writeStream
+          .outputMode(mode).format("memory").queryName(name)
+          // state-store + offset-log commits fsync per partition per
+          // batch; on a local /tmp that is the same ~400 ms-class
+          // latency floor measured for shuffle files (BENCH_NOTES §r5),
+          // so the checkpoint goes on the same fast local dir the
+          // shuffle uses. One-shot oracle drains never restart, so
+          // durability is moot.
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      }
+      q.awaitTermination()
+      (s.table(name), q)
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -573,50 +582,47 @@ object StreamingOps {
     // micro-batches still converges to the global group-by regardless of
     // how the source files split it; the oracle equivalence needs no
     // disjoint-keys precondition. Final state after the AvailableNow
-    // drain ≡ the batch group-by, which IS the oracle. The versioned
-    // state dir is collected into the result and deleted before return
-    // (Bench runs every query twice per JVM; leaked state dirs under
-    // target/ would otherwise accrete per invocation).
+    // drain ≡ the batch group-by, which IS the oracle. The final state
+    // is read into an eager checkpoint (freed by the per-query pin
+    // release) and the whole versioned state root is deleted before
+    // return, so no call leaves a directory under target/.
     "streaming_foreachbatch_merge" -> ((s, _) => {
       import java.nio.file.{Files, Paths}
       val srcDir = t4FixtureDir()
       val stateRoot = Files.createTempDirectory(
         Paths.get("target"), "graft_merge_state")
-      @volatile var version = -1L
-      val stream = s.readStream.schema(t4Schema)
-        .option("maxFilesPerTrigger", 1).json(srcDir)
-      val q = stream.writeStream.trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val upserts = batch.groupBy(col("batch_key"))
-            .agg(count(lit(1)).as("n_rows"),
-                 sum(col("amount_cents")).as("total_cents"),
-                 max(col("event_id")).as("last_event_id"))
-          val merged =
-            if (version < 0) upserts
-            else {
-              val prev = s.read.parquet(s"$stateRoot/v$version")
-              // MERGE WHEN MATCHED: merge the two partial aggregates
-              prev.unionByName(upserts)
-                .groupBy(col("batch_key"))
-                .agg(sum(col("n_rows")).as("n_rows"),
-                     sum(col("total_cents")).as("total_cents"),
-                     max(col("last_event_id")).as("last_event_id"))
-            }
-          merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$stateRoot/v${version + 1}")
-          version += 1
-        }
-        .start()
-      q.awaitTermination()
-      // Return the final state parquet AS A PLAN (r8 verdict #4: no
-      // .collect() in any registered query path) — the caller's action
-      // reads the files distributed. Superseded versions are deleted;
-      // the final version stays on disk under target/ for the plan to
-      // read (temp dir, reaped with the build dir).
-      (0L until version).foreach { v =>
-        deleteRecursively(Paths.get(s"$stateRoot/v$v").toFile)
-      }
-      s.read.parquet(s"$stateRoot/v$version").orderBy(col("batch_key"))
+      try {
+        @volatile var version = -1L
+        val stream = s.readStream.schema(t4Schema)
+          .option("maxFilesPerTrigger", 1).json(srcDir)
+        val q = stream.writeStream.trigger(Trigger.AvailableNow())
+          .foreachBatch { (batch: DataFrame, _: Long) =>
+            val upserts = batch.groupBy(col("batch_key"))
+              .agg(count(lit(1)).as("n_rows"),
+                   sum(col("amount_cents")).as("total_cents"),
+                   max(col("event_id")).as("last_event_id"))
+            val merged =
+              if (version < 0) upserts
+              else {
+                val prev = s.read.parquet(s"$stateRoot/v$version")
+                // MERGE WHEN MATCHED: merge the two partial aggregates
+                prev.unionByName(upserts)
+                  .groupBy(col("batch_key"))
+                  .agg(sum(col("n_rows")).as("n_rows"),
+                       sum(col("total_cents")).as("total_cents"),
+                       max(col("last_event_id")).as("last_event_id"))
+              }
+            merged.coalesce(1).write.mode("overwrite")
+              .parquet(s"$stateRoot/v${version + 1}")
+            version += 1
+          }
+          .start()
+        q.awaitTermination()
+        // The result stays a plan (r8 verdict #4: no .collect() in any
+        // registered query path), over checkpointed blocks, not files.
+        s.read.parquet(s"$stateRoot/v$version").localCheckpoint()
+          .orderBy(col("batch_key"))
+      } finally deleteRecursively(stateRoot.toFile)
     }),
 
     // Watermark-lag monitor via StreamingQueryProgress (r10 verdict

@@ -287,4 +287,63 @@ class StreamingOpsSpec extends SparkSpec {
     assert(emitted == totalClickMatches + (unmatchedClicks - heldBack),
       "emitted rows must be matches plus watermark-expired unmatched clicks")
   }
+
+  test("streaming_foreachbatch_merge leaves no graft_merge_state directory behind") {
+    def stateDirs: Int = Option(new java.io.File("target").listFiles()).toSeq.flatten
+      .count(_.getName.startsWith("graft_merge_state"))
+    val before = stateDirs
+    assert(graft.streaming.StreamingOps
+      .queries("streaming_foreachbatch_merge")(spark, sf).collect().nonEmpty)
+    assert(stateDirs == before)
+  }
+
+  test("overlapping drains leave the session's shuffle width unchanged") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "7") // not the drain width, so a leaked drain width shows
+    try {
+      val src = tempDir("graft_drain_width").resolve("src").toString
+      spark.range(1).write.json(src)
+      def drain(i: Int) = Future(graft.streaming.StreamingOps.drainWithHandle(spark,
+        spark.readStream.schema("id LONG").json(src)
+          .select(udf((x: Long) => DrainGate.pass(i, x)).apply(col("id"))), "append"))
+      // A starts, B starts, A ends, B ends: each waits inside its batch
+      val a = drain(0)
+      assert(DrainGate.entered(0).await(60, SECONDS))
+      val b = drain(1)
+      assert(DrainGate.entered(1).await(60, SECONDS))
+      DrainGate.release(0).countDown()
+      Await.result(a, 2.minutes)
+      DrainGate.release(1).countDown()
+      Await.result(b, 2.minutes)
+      assert(spark.conf.get(key) == "7")
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("ensureEventsReadConf keeps an explicit disable and sets an unset key") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.set(key, "false")
+    Tables.ensureEventsReadConf(s)
+    assert(s.conf.get(key) == "false")
+    s.conf.unset(key)
+    Tables.ensureEventsReadConf(s)
+    assert(s.conf.get(key) == "true")
+  }
+}
+
+/** Latches a test stream's batch waits on, reached from inside a task:
+  * an object, so tasks share it instead of a serialized copy. */
+object DrainGate {
+  import java.util.concurrent.{CountDownLatch, TimeUnit}
+  val entered: Array[CountDownLatch] = Array.fill(2)(new CountDownLatch(1))
+  val release: Array[CountDownLatch] = Array.fill(2)(new CountDownLatch(1))
+  def pass(i: Int, x: Long): Long = {
+    entered(i).countDown()
+    release(i).await(60, TimeUnit.SECONDS)
+    x
+  }
 }

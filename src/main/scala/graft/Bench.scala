@@ -59,8 +59,9 @@ object Bench {
     // dead the moment the action returns (every pass rebuilds its
     // own), but un-freed they accumulate — ~40 orphaned checkpoint
     // RDDs per pass across a 401-query session. releaseQueryPins
-    // frees exactly the non-memo pins a query created, AFTER the
-    // timing is captured — the timed region is unchanged.
+    // frees exactly the query's own pins (`Pins` records each with its
+    // owner and scope; session memos are exempt), AFTER the timing is
+    // captured — the timed region is unchanged.
     var freedPins = 0L
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val pinsBefore = graft.api.Graft.pinSnapshot(spark)

@@ -15,10 +15,11 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       if (keep(name)) {
-        // per-query pin hygiene (r16): free the query's own lazy
-        // checkpoints once its write returns — session memos are
-        // exempt — so a full 401-query dump doesn't accumulate
-        // hundreds of orphaned checkpoint RDDs in the block manager.
+        // per-query pin hygiene (r16): free the query's own pins
+        // (`Pins`, by their recorded owner and scope) once its write
+        // returns — session memos are exempt — so a full 401-query
+        // dump doesn't accumulate hundreds of orphaned checkpoint RDDs
+        // in the block manager.
         val pinsBefore = graft.api.Graft.pinSnapshot(spark)
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.api.Pins.PinSyntax
 import graft.functions.{SortedIntersectCount, TextSignatures, VectorFns}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -184,7 +185,7 @@ object Graft {
     // above it (a 100 TB corpus) the pruned re-scans are kept: three
     // fault-tolerant passes beat one corpus-scale non-replicated pin
     // whose loss aborts the job (guide §5).
-    val tagged = pinBounded(carryCols.foldLeft(items
+    val tagged = Pins.bounded(carryCols.foldLeft(items
         .withColumn("__bn", count(lit(1)).over(w))
         .withColumn("__rep", min(col(idCol)).over(w))) { (df, c) =>
       df.withColumn(s"__rep_$c", min_by(col(c), col(idCol)).over(w))
@@ -402,7 +403,7 @@ object Graft {
     c.filter(col("vec_id") < k)
       .select(keys.map(col) ++ Seq(col("vec_id").cast("int").as("g"),
         col(vecCol).as("cv")): _*)
-      .localCheckpoint()
+      .pin(eager = true)
 
   /** One k-means "M step": mean centroid per cell of `assign`
     * ((vec_id, keys…, g)), as an ordered ARRAY<DOUBLE> (keys…, g, cv).
@@ -419,7 +420,7 @@ object Graft {
       .agg(transform(
         array_sort(collect_list(struct(col("dim"), col("cx")))),
         p => p.getField("cx")).as("cv"))
-      .localCheckpoint()
+      .pin(eager = true)
   }
 
   /** k-means "E step": inner-product argmax assignment of every vector
@@ -779,109 +780,11 @@ object Graft {
       .select(col(idCol)).distinct()
   }
 
-  // localCheckpoint persists its RDD OUTSIDE the CacheManager, so
-  // Dataset.unpersist cannot free it; track the RDD ids each checkpoint
-  // creates and unpersist THOSE when superseded, bounding an N-round
-  // fixpoint loop to two generations of executor storage. The ids come
-  // from the checkpointed frame's own LogicalRDD leaf, not from a diff of
-  // the context's persistent RDDs: a pin another thread makes while the
-  // checkpoint job runs must not be taken for this one's and freed.
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val out = df.localCheckpoint()
-    (out, out.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }.toSet)
-  }
+  /** [[Pins.snapshot]], kept under its name for the benchmark. */
+  def pinSnapshot(s: SparkSession): Set[Int] = Pins.snapshot(s)
 
-  private def freeCheckpoints(df: DataFrame, ids: Set[Int]): Unit = {
-    val sc = df.sparkSession.sparkContext
-    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-  }
-
-  // ---- size-guarded pins (r16: VERDICT r15 #2) ----------------------
-  /** Raw file bytes feeding a frame's plan: the sum of the on-disk
-    * sizes of every file-sourced leaf. A cheap, deterministic proxy
-    * for "is this frame sub-corpus?" that needs no action — post-join
-    * `stats.sizeInBytes` is useless here (the non-CBO visitor
-    * MULTIPLIES child sizes across joins), but the leaves' footprint
-    * bounds what a pin of any projection/aggregate of them can cost
-    * to rebuild. Non-file leaves (an already-checkpointed input, a
-    * memoized exchange) count 0: they are bounded-by-contract
-    * relations, not raw corpus. */
-  private[graft] def inputFileBytes(df: DataFrame): Long =
-    df.queryExecution.optimizedPlan.collectLeaves().map {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.sizeInBytes
-          case _ => 0L
-        }
-      case _ => 0L
-    }.sum
-
-  /** Lazy localCheckpoint a multi-consumer frame ONLY while its raw
-    * input footprint says the pin is cheap to hold and cheap to lose.
-    * `localCheckpoint` severs lineage into non-replicated executor
-    * storage: on a cluster, losing one executor aborts the job, and
-    * the pinned blocks occupy the execution-storage memory the query
-    * itself needs — a fine trade for a frame derived from a few GB
-    * (rebuild = one cheap pass; blocks fit anywhere) and a
-    * fault-tolerance liability for a corpus-derived one (guide §5).
-    * Above the bound the duplicate-subtree replay is kept instead:
-    * pruned parquet re-scans are cheap, pushdown-friendly and
-    * fault-tolerant. Bound: `spark.graft.pinMaxInputBytes` (default
-    * 4 GiB; 0 disables pinning outright — the session-conf opt-out
-    * for these library entry points). */
-  private[graft] def pinBounded(df: DataFrame): DataFrame = {
-    val maxBytes = df.sparkSession.conf
-      .get("spark.graft.pinMaxInputBytes", (4L << 30).toString).toLong
-    if (maxBytes > 0 && inputFileBytes(df) <= maxBytes) df.localCheckpoint(false)
-    else df
-  }
-
-  // ---- per-query pin lifecycle (r16: VERDICT r15 #3) ----------------
-  /** RDD ids pinned by session-scoped memo builds — the blocks that
-    * MUST outlive the query that happened to build them. Everything
-    * else a query pins (lazy per-query checkpoints) is garbage the
-    * moment its action returns; [[releaseQueryPins]] frees exactly
-    * that difference. WeakHashMap keyed like [[sharedMemo]]; the
-    * value set only grows (memo builds per session are bounded). */
-  private val memoPinIds: java.util.Map[SparkSession, java.util.Set[Integer]] =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, java.util.Set[Integer]]())
-
-  private def protectPinIds(s: SparkSession, ids: Iterable[Int]): Unit = {
-    val set = memoPinIds.synchronized {
-      var cur = memoPinIds.get(s)
-      if (cur == null) {
-        cur = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-        memoPinIds.put(s, cur)
-      }
-      cur
-    }
-    ids.foreach(id => set.add(id): Unit)
-  }
-
-  /** Snapshot of the block manager's persistent-RDD ids — take one
-    * before running a query, hand it to [[releaseQueryPins]] after. */
-  def pinSnapshot(s: SparkSession): Set[Int] =
-    s.sparkContext.getPersistentRDDs.keySet.toSet
-
-  /** Unpersist every RDD pinned since `before` that is NOT a session
-    * memo's block (those amortize across queries by design). Call it
-    * AFTER the query's action returns, outside any timed region: the
-    * per-query lazy checkpoints it frees are dead — each query closure
-    * rebuilds its own pins — but without this a full-registry session
-    * accumulates hundreds of orphaned checkpoint RDDs (r15 verdict
-    * "What's wrong" #2). Returns the number freed. Never touches
-    * blocks that were already unpersisted by generational loops. */
-  def releaseQueryPins(s: SparkSession, before: Set[Int]): Int = {
-    val sc = s.sparkContext
-    val prot = memoPinIds.get(s)
-    val created = sc.getPersistentRDDs.keySet.toSet -- before
-    val freeable = created.filter(id => prot == null || !prot.contains(id))
-    freeable.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    freeable.size
-  }
+  /** [[Pins.release]], kept under its name for the benchmark. */
+  def releaseQueryPins(s: SparkSession, before: Set[Int]): Int = Pins.release(s, before)
 
   /** [[connectedComponentLabels]] under its default guard, over pairs in
     * named id columns, as (id, cluster_id = min member id). Kept as a
@@ -1044,7 +947,7 @@ object Graft {
     // caller should still pre-aggregate/persist what it passes in.
     val parts = df.repartitionByRange(numParts, order: _*)
       .withColumn("__pid", spark_partition_id())
-      .localCheckpoint()
+      .pin(eager = true)
     val aggs = (count(lit(1)).as("__pn") +:
       sumCols.map(c => sum(col(c)).as(s"__ps_$c")))
     val wOff = Window.orderBy(col("__pid"))
@@ -1194,7 +1097,7 @@ object Graft {
     * so the pair-count subtree is not replanned into every later round,
     * and the corpus itself localCheckpoints every `checkpointEvery`
     * rounds (freeing the superseded generation through
-    * `checkpointTracked`) so production round counts (tens of
+    * [[Pins.nextGeneration]]) so production round counts (tens of
     * thousands) never accumulate an unbounded narrow-map lineage — and
     * NEVER re-shuffle the text: the only per-round exchange is the
     * (pair, count) aggregate.
@@ -1230,14 +1133,13 @@ object Graft {
     require(!docs.columns.exists(reserved.contains),
       s"docs must not carry a ${reserved.mkString("/")} column")
     var corpus = docs.filter(col(textCol).isNotNull)
-    var corpusIds = Set.empty[Int]
     var merges: DataFrame = null
     var r = 1
     var exhausted = false
     while (r <= rounds && !exhausted) {
       val m = bpeTopPair(corpus, textCol)
         .select(lit(r).as("round"), col("a"), col("b"), col("cnt"))
-        .localCheckpoint()
+        .pin(eager = true)
       if (m.isEmpty) {
         // no adjacent pair left: merging against an empty argmax would
         // cross-join the corpus to zero rows — stop instead
@@ -1249,12 +1151,8 @@ object Graft {
           .withColumn(textCol, TextSignatures.bpeMergeApply(
             col(textCol), col("__bpe_a"), col("__bpe_b")))
           .drop("__bpe_round", "__bpe_a", "__bpe_b", "__bpe_cnt")
-        if (r % checkpointEvery == 0) {
-          val (cp, ids) = checkpointTracked(corpus) // eager: old gen dead after this
-          freeCheckpoints(corpus, corpusIds)
-          corpus = cp
-          corpusIds = ids
-        }
+        if (r % checkpointEvery == 0)
+          corpus = Pins.nextGeneration(corpus) // eager: old gen dead after this
         merges = if (merges == null) m else merges.unionByName(m)
         r += 1
       }
@@ -1370,7 +1268,7 @@ object Graft {
     * graphs (detected with a single anti-join isEmpty) skip the term
     * entirely and run the lazy single-job linear-lineage loop; graphs
     * with sinks run the conservation form with per-iteration
-    * localCheckpoint under the `checkpointTracked` generation-freeing
+    * localCheckpoint under the [[Pins.nextGeneration]] generation-freeing
     * discipline (two consumers per iteration would otherwise double the
     * replanned lineage every round). */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String, wgtCol: String,
@@ -1382,7 +1280,7 @@ object Graft {
     // jobs, so the caller's whole edge build re-executed per job.
     // Size-guarded (|E| rows, 3 narrow columns): above the bound the
     // caller's pruned scan re-runs instead — fault-tolerant at 100 TB.
-    val e = pinBounded(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
+    val e = Pins.bounded(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"),
                          col(wgtCol).cast("double").as("wgt")))
     val out = e.groupBy(col("src")).agg(sum(col("wgt")).as("__out_w"))
     // A node whose out-weights sum to 0 (or null) cannot be normalized:
@@ -1402,7 +1300,7 @@ object Graft {
             lit("pageRank: out-weights of node "), col("src").cast("string"),
             lit(" sum to 0 or null; edge weights must sum nonzero per source"))))
         ).as("p"))
-      .localCheckpoint(false)
+      .pin(eager = false)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst"))).distinct()
     // one up-front probe: does the graph have sinks at all? Sink-free
@@ -1415,9 +1313,8 @@ object Graft {
     val n0 = nodes.crossJoin(
       broadcast(nodes.agg(count(lit(1)).cast("double").as("__n_nodes"))))
     // n1 is re-joined every sink-free round too — same pin, lazily
-    val n1 = if (hasDangling) n0.localCheckpoint() else n0.localCheckpoint(false)
+    val n1 = n0.pin(eager = hasDangling)
     var rank = n1.select(col("node"), (lit(1.0) / col("__n_nodes")).as("rank"))
-    var rankIds = Set.empty[Int]
     for (_ <- 1 to iterations) {
       val contrib = rank.join(edgeP, rank("node") === edgeP("src"))
         .groupBy(col("dst")).agg(sum(col("rank") * col("p")).as("__in_rank"))
@@ -1443,16 +1340,13 @@ object Graft {
         // one round, same generation-freeing discipline as
         // bpeTrainEncode; at cluster scale this slot is reliable
         // checkpointing on a cadence.
-        val (next, ids) = checkpointTracked(
+        rank = Pins.nextGeneration(
           n1.join(contrib, n1("node") === contrib("dst"), "left")
             .crossJoin(broadcast(sinkMass))
             .select(n1("node"),
               (lit(1.0 - damping) / col("__n_nodes") +
                 lit(damping) * (coalesce(col("__in_rank"), lit(0.0)) +
                   col("__sink_mass") / col("__n_nodes"))).as("rank")))
-        freeCheckpoints(next, rankIds)
-        rank = next
-        rankIds = ids
       }
     }
     rank
@@ -1544,7 +1438,7 @@ object Graft {
               TextSignatures.wordBigramHashes(col(textCol)).as("__bg"))
       .withColumn("__n", size(col("__bg")))
       .repartition(col("__id"))
-      .localCheckpoint() // consumed 4×: postings, df, prefix, verify ×2
+      .pin(eager = true) // consumed 4×: postings, df, prefix, verify ×2
     containmentPairsFromShingles(toks, t)
   }
 
@@ -1570,7 +1464,7 @@ object Graft {
     // posting-join path below — the shape that scales with posting
     // products, not corpus².
     val gdf = post.groupBy(col("__g")).agg(count(lit(1)).as("__gdf"))
-      .localCheckpoint()
+      .pin(eager = true)
     val vocab = gdf.count()
     val nDocs = toks.count()
     if (vocab <= 4096 && nDocs <= 10000)
@@ -1601,7 +1495,7 @@ object Graft {
       .select(col("__id"), col("__n"),
         transform(sequence(lit(0), lit(nWords - 1)),
           w => coalesce(element_at(col("__m"), w), lit(0L))).as("__mask"))
-      .localCheckpoint() // both join sides read it; masks are n×W longs
+      .pin(eager = true) // both join sides read it; masks are n×W longs
     val inter = SortedIntersectCount.bitsetIntersectCount(
       col("__ma"), col("__mb"))
     masks.select(col("__id").as("a_id"), col("__n").as("__na"),
@@ -1868,7 +1762,7 @@ object Graft {
                     element_at(toks, i + 1).as("w2")))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
     val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+      .pin(eager = true)
     val left = c2.groupBy(col("w1")).agg(sum(col("c2")).as("cl"))
     val right = c2.groupBy(col("w2")).agg(sum(col("c2")).as("cr"))
     val n = c2.agg(sum(col("c2")).as("n_bigrams"))
@@ -1916,13 +1810,13 @@ object Graft {
         .withColumn("__rel", floor(VectorFns.dot(col("__qv"), col("__v")) * 1e6 + 0.5).cast("long")),
         poolK, "__rel", "__id", "__rk", perQuery)
       .select(col("__qid"), col("__id"), col("__v"), col("__rel"))
-      .localCheckpoint() // k self-joins below; bound the replanned lineage
+      .pin(eager = true) // k self-joins below; bound the replanned lineage
     val pairs = cand.select(col("__qid"), col("__id").as("__a"), col("__v").as("__va"))
       .join(cand.select(col("__qid"), col("__id").as("__b"), col("__v").as("__vb")), Seq("__qid"))
       .filter(col("__a") =!= col("__b"))
       .select(col("__qid"), col("__a"), col("__b"),
               floor(VectorFns.dot(col("__va"), col("__vb")) * 1e6 + 0.5).cast("long").as("__sim"))
-      .localCheckpoint()
+      .pin(eager = true)
     var out = topK(cand.withColumn("__mmr", col("__rel") * 10), 1, "__mmr", "__id", "__r", perQuery)
       .select(col("__qid"), lit(1L).as("pos"), col("__id"), col("__mmr"))
     for (p <- 2 to k) {
@@ -1939,7 +1833,7 @@ object Graft {
         .withColumn("__mmr", col("__rel") * lam - col("__maxsim") * lamC)
       val pick = topK(scored, 1, "__mmr", "__id", "__r", perQuery)
         .select(col("__qid"), lit(p.toLong).as("pos"), col("__id"), col("__mmr"))
-      out = out.unionByName(pick).localCheckpoint()
+      out = out.unionByName(pick).pin(eager = true)
     }
     out.select(col("__qid").as("qid"), col("pos"), col("__id").as("id"),
                col("__mmr").as("mmr10_e6"))
@@ -2178,13 +2072,15 @@ object Graft {
     val files = graft.Tables.fileIdentity(s, dir)
     val cached = perSession.get(key)
     if (cached != null && cached._1 == files) cached._2
-    else {
+    else Pins.session {
       // NOT computeIfAbsent: builds are reentrant (one memoized build
       // consumes another — jaccardPairs reads shingled), and a nested
       // computeIfAbsent on the same CHM throws "Recursive update".
       // Racing builds at worst double-build one checkpoint: the merge
       // below keeps the first entry registered for these files, and
-      // both callers converge on it.
+      // both callers converge on it. Every pin the build makes on this
+      // thread (the eager checkpoint, and the nested lazy pins it
+      // materializes) is session-scoped: no query's release frees it.
       val df = build
       // fingerprint BEFORE the checkpoint erases the scan lineage;
       // put (not putIfAbsent): a REBUILD in a later session of the
@@ -2193,22 +2089,13 @@ object Graft {
       memoFingerprints.put(key, graft.PlanStats.countsJson(df)): Unit
       // r16 (VERDICT r15 #6): attribute the one-time build cost — it
       // lands on the first timed consumer and flatters every later
-      // one, so make it visible next to the per-query numbers. And
-      // track which RDD ids the build pinned (the eager checkpoint
-      // materializes any nested lazy pins too): releaseQueryPins must
-      // never free a memo's blocks. Known limit: the protected set is a
-      // diff of the context's global persistent RDDs, so a pin another
-      // thread makes during the build is protected too. Under concurrent
-      // queries that over-protects: the pin leaks until the session ends,
-      // but no pin is ever freed early. ROADMAP item 4a's Pins API is the
-      // fix. Known limit of the file-identity key: an entry replaced
-      // after its dir's files changed leaves its pins in the protected
-      // set, so they stay until the session ends.
-      val pinsBefore = s.sparkContext.getPersistentRDDs.keySet
+      // one, so make it visible next to the per-query numbers. Known
+      // limit of the file-identity key: an entry replaced after its
+      // dir's files changed keeps its session pins until the session
+      // ends.
       val t0 = System.nanoTime()
-      val built = df.localCheckpoint()
+      val built = df.pin(eager = true)
       System.err.println(f"[memo-build] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      protectPinIds(s, (s.sparkContext.getPersistentRDDs.keySet -- pinsBefore).toSeq)
       perSession.merge(key, (files, built),
         (old, mine) => if (old._1 == files) old else mine)._2
     }
@@ -2250,7 +2137,7 @@ object Graft {
     val e = edges
       .select(col(aCol).cast("long").as("__a"), col(bCol).cast("long").as("__b"))
       .distinct()
-      .localCheckpoint() // consumed 3× below (deg, adjacency, per-edge probe)
+      .pin(eager = true) // consumed 3× below (deg, adjacency, per-edge probe)
     val deg = e.select(col("__a").as("__v")).unionAll(e.select(col("__b").as("__v")))
       .groupBy(col("__v")).agg(count(lit(1)).as("__d"))
     val wedges = deg.agg(expr("sum(__d * (__d - 1)) div 2").as("n_wedges"),
@@ -2351,7 +2238,7 @@ object Graft {
     var v = v0
     for (_ <- 1 to iters) {
       val w = pcaMatvec(cov, v)
-      v = pcaUnit(w, pcaWs2(w)).localCheckpoint()
+      v = pcaUnit(w, pcaWs2(w)).pin(eager = true)
     }
     v.select((col("__vj") + 1).cast("int").as("dim"), col("__v_e6").as("pc1_e6"))
   }
@@ -2381,7 +2268,7 @@ object Graft {
              .as("__cq"), count(lit(1)).as("__cn"))
       .select(col("__ci"), col("__cj"),
               floor(col("__cq") / col("__cn")).cast("long").as("__cr"))
-      .localCheckpoint() // reused by every iteration; cut the self-join lineage
+      .pin(eager = true) // reused by every iteration; cut the self-join lineage
     val dims = df.select(size(col(vecCol))).head.getInt(0)
     val v0 = m.select(col("__i").as("__vj"),
       lit(math.floor(1e6 / math.sqrt(dims.toDouble)).toLong).as("__v_e6"))
@@ -2424,9 +2311,9 @@ object Graft {
     var v = v0
     val rows = (1 to iters).map { t =>
       val w = pcaMatvec(cov, v)
-        .localCheckpoint(false) // feeds the unit step AND the ws2 book column
+        .pin(eager = false) // feeds the unit step AND the ws2 book column
       val ws2 = pcaWs2(w)
-      val next = pcaUnit(w, ws2).localCheckpoint(false)
+      val next = pcaUnit(w, ws2).pin(eager = false)
       val row = next.select(col("__vj"), col("__v_e6").as("__vn"))
         .join(v.select(col("__vj"), col("__v_e6").as("__vp")), "__vj")
         .agg(lit(t.toLong).as("round"),
@@ -2465,7 +2352,7 @@ object Graft {
     val (x, n, w0) = logregFeatures(df, idCol, labelCol, vecCol)
     var w = w0
     for (_ <- 1 to steps)
-      w = logregNextW(x, n, w).localCheckpoint()
+      w = logregNextW(x, n, w).pin(eager = true)
     w.select((col("__wj") + 1).cast("int").as("dim"), col("__we").as("w_e6"))
   }
 
@@ -2478,7 +2365,7 @@ object Graft {
         posexplode(col(vecCol).cast("array<double>")).as(Seq("__j", "__xd")))
       .select(col("__rid"), col("__y"), col("__j"),
         floor(col("__xd") * 1e6 + 0.5).cast("long").as("__xe"))
-      .localCheckpoint() // consumed 2× per round
+      .pin(eager = true) // consumed 2× per round
     val n = df.agg(count(lit(1)).as("__nn"))
     val w0 = x.select(col("__j").as("__wj")).distinct()
       .select(col("__wj"), lit(0L).as("__we"))
@@ -2538,9 +2425,9 @@ object Graft {
     var m = logregMargins(x, w)
     val rows = (1 to steps).map { t =>
       val next = logregUpdate(x, n, w, m)
-        .localCheckpoint(false) // feeds the book row AND the next round
+        .pin(eager = false) // feeds the book row AND the next round
       val mNext = logregMargins(x, next)
-        .localCheckpoint(false) // feeds the accuracy row AND next update
+        .pin(eager = false) // feeds the accuracy row AND next update
       val motion = next.select(col("__wj"), col("__we").as("__wn"))
         .join(w.select(col("__wj"), col("__we").as("__wp")), "__wj")
         .agg(lit(t.toLong).as("round"),
@@ -2583,7 +2470,7 @@ object Graft {
         expr("datediff(__week, cohort_week) div 7").cast("long"))
       .groupBy(col("cohort_week"), col("week_offset"))
       .agg(countDistinct(col("__k")).as("n_active"))
-      .localCheckpoint(false)
+      .pin(eager = false)
     val sizes = cells.filter(col("week_offset") === 0)
       .select(col("cohort_week").as("__cw"), col("n_active").as("n_cohort"))
     cells.join(broadcast(sizes), col("cohort_week") === col("__cw"))
@@ -2741,7 +2628,7 @@ object Graft {
   def ksDriftOneVsRest(df: DataFrame, groupCol: String, valCol: String): DataFrame = {
     val cnt = df.groupBy(col(groupCol).as("__g"), col(valCol).as("__v"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .pin(eager = true)
     val vals = cnt.select(col("__v")).distinct()
     val grps = cnt.groupBy(col("__g")).agg(sum(col("__c")).as("__ng"))
     val tot = cnt.groupBy(col("__v")).agg(sum(col("__c")).as("__cv"))
@@ -2884,9 +2771,9 @@ object Graft {
     // join + distinct, 16 parquet scans in the before-plan). The edge
     // checkpoint is |E|-narrow; a1 is |authorities|-narrow.
     val e = edges.select(col(hubCol).as("__hc"), col(authCol).as("__ha")).distinct()
-      .localCheckpoint(false)
+      .pin(eager = false)
     val a1 = e.groupBy(col("__ha")).agg(count(lit(1)).as("a1"))
-      .localCheckpoint(false)
+      .pin(eager = false)
     val h1 = e.join(a1, "__ha").groupBy(col("__hc")).agg(sum(col("a1")).as("h1"))
     val a2 = e.join(h1, "__hc").groupBy(col("__ha")).agg(sum(col("h1")).as("a2"))
     a2.join(a1, "__ha")
@@ -3365,7 +3252,7 @@ object Graft {
       // otherwise accumulate MEMORY_AND_DISK blocks that nothing ever
       // unpersists). The checkpoint is one extra pass over |V| label
       // rows; the returned frame owns its own blocks from here.
-      val out = s.createDataFrame(labels).toDF("v", "lbl").localCheckpoint()
+      val out = s.createDataFrame(labels).toDF("v", "lbl").pin(eager = true)
       labels.unpersist(blocking = false)
       out
     }

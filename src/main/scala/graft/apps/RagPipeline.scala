@@ -1,7 +1,8 @@
 package graft.apps
 
 import graft.{BenchEnv, Tables}
-import graft.api.Graft
+import graft.api.{Graft, Pins}
+import graft.api.Pins.PinSyntax
 import graft.operators.{PipelineOps, PrepOps}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,7 +33,7 @@ import org.apache.spark.sql.functions._
   *    Jaccard verification and curation each start from a file scan);
   *  - the fresh docs, hash-partitioned by `doc_id` again before the
   *    transcript stubs, which carry it as `file_id`;
-  *  - the curated chunk frame, pinned ([[Graft.pinBounded]]) for its two
+  *  - the curated chunk frame, pinned ([[Pins.bounded]]) for its two
   *    writes, the index and its metadata.
   *
   * Why: locally the corpus is ONE parquet split, and adaptive execution
@@ -60,9 +61,12 @@ import org.apache.spark.sql.functions._
   * frame exists. This is safe because the index is a function of the
   * corpus only: it reads neither the ingest state nor the dialogues, and
   * the branches write disjoint directories (`index`, `index_meta`,
-  * `retrieval_demo` against `state*` and `dialogues`). The dedup's
-  * components kernel unpersists only the RDDs it made itself, so
-  * ingest's pin of the fresh docs survives it. Why: most stages of either branch run
+  * `retrieval_demo` against `state*` and `dialogues`). Both branches
+  * pin through [[Pins]], which frees a pin only by its own record:
+  * the dedup's components kernel unpersists only the RDDs it made
+  * itself, so ingest's pin of the fresh docs survives it, and the
+  * index thread's pins belong to the caller's query (the thread
+  * inherits its pin owner), so the caller's release frees them. Why: most stages of either branch run
   * one or two tasks, so on a 4-core host the other branch's jobs fill
   * cores that sat idle. The thread is created by `run`, not taken from a
   * pool, so it starts with a copy of the caller's local properties: its
@@ -120,7 +124,7 @@ object RagPipeline {
   def ingest(spark: SparkSession, docs: DataFrame, stateDir: String): DataFrame = {
     val state = readState(spark, stateDir)
     val fresh = docs.join(broadcast(state), Seq("doc_id"), "left_anti")
-      .localCheckpoint() // pin: `fresh` must not observe the state swap below
+      .pin(eager = true) // pin: `fresh` must not observe the state swap below
     fresh.select(col("doc_id")).union(state)
       .write.mode(SaveMode.Overwrite).parquet(stateDir + "_next")
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -220,7 +224,7 @@ object RagPipeline {
     val curated = Graft.curateQuota(
       graft.operators.CurationOps.scored(deduped), "doc_id", "text", "lang", "quality_e6", 50)
     // pinned: the index and index_meta writes both consume it
-    val chunks = Graft.pinBounded(
+    val chunks = Pins.bounded(
       PrepOps.chunkDocuments(curated.select(col("doc_id"), col("text"))))
 
     // 4. embed chunks (deterministic hashing embedder standing in for the

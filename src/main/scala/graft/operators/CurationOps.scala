@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -66,7 +67,7 @@ object CurationOps {
       val train = toks.filter(col("is_train"))
       // ≤ B×L rows: the whole likelihood model in one aggregation
       val counts = train.groupBy(col("b"), col("lang"))
-        .agg(count(lit(1)).as("c")).localCheckpoint()
+        .agg(count(lit(1)).as("c")).pin(eager = true)
       val totals = counts.groupBy(col("lang")).agg(sum(col("c")).as("t"))
       val priorsN = docs.filter(col("is_train"))
         .groupBy(col("lang")).agg(count(lit(1)).as("nd"))
@@ -312,7 +313,7 @@ object CurationOps {
       // |langs|-row registers; scans 6 → 2 (the rate-table aggregate
       // and the decision pass — the declared two-pass floor).
       val byLang = d.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val tot = byLang.agg(sum(col("n_l")).as("n"),
                            count(lit(1)).as("nl_langs"))
       val kept = d.join(broadcast(byLang), "lang").crossJoin(broadcast(tot))
@@ -326,7 +327,7 @@ object CurationOps {
         .groupBy(col("lang"))
         .agg(max(col("n_l")).as("n_before"), max(col("n")).as("n"),
              max(col("nl_langs")).as("nl_langs"), sum(col("keep")).as("n_kept"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       kept.crossJoin(broadcast(kept.agg(sum(col("n_kept")).as("kept_total"))))
         .select(col("lang"), col("n_before"),
           least(lit(1000000L),
@@ -403,7 +404,7 @@ object CurationOps {
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
              sum(size(split(col("text"), " "))).as("n_tokens"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val withW = byLang
         .crossJoin(broadcast(byLang.agg(
           sum(col("n_tokens")).as("tok_total"), sum(col("n_docs")).as("doc_total"))))
@@ -492,7 +493,7 @@ object CurationOps {
       val counts = feats.groupBy(col("b")).agg(
           count(lit(1)).as("cr"),
           count(when(col("source") === "src1", 1)).as("ct"))
-        .localCheckpoint()
+        .pin(eager = true)
       val totals = counts.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"))
       feats.join(broadcast(counts), Seq("b"))
         .crossJoin(broadcast(totals))

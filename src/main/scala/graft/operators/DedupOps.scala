@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.api.Graft
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -316,7 +317,7 @@ object DedupOps {
           .map(lit): _*)).as("d"), col("n"))
         .where(expr("(n div d) <= 1414"))
         .agg(coalesce(min(col("d")), lit(256L)).as("sample_div"))
-        .localCheckpoint(false) // 1-row scalar, read by two sampled()
+        .pin(eager = false) // 1-row scalar, read by two sampled()
                                 // crossJoins + the output echo
       def sampled(df: DataFrame): DataFrame = df
         .crossJoin(broadcast(pick))
@@ -325,7 +326,7 @@ object DedupOps {
           % col("sample_div") === 0)
         .drop("sample_div")
       val sh = sampled(shingled(s, dir).filter(size(col("bg")) > 0))
-        .select(col("doc_id"), col("bg")).localCheckpoint(false)
+        .select(col("doc_id"), col("bg")).pin(eager = false)
       val pairs = sh.select(col("doc_id").as("a_id"), col("bg").as("bg_a"))
         .join(sh.select(col("doc_id").as("b_id"), col("bg").as("bg_b")),
               col("a_id") < col("b_id"))
@@ -336,7 +337,7 @@ object DedupOps {
           expr("inter * 1000000 div (size(bg_a) + size(bg_b) - inter)")
             .as("j_e6"))
       val bands = lshBands(sampled(minhashSigs(s, dir)))
-        .localCheckpoint(false) // both sides of the band self-join
+        .pin(eager = false) // both sides of the band self-join
       val cand = bands.select(col("doc_id").as("a_id"), col("band"))
         .join(bands.select(col("doc_id").as("b_id"), col("band")),
               Seq("band"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -286,12 +287,12 @@ object EventOps {
       // events (6 scans in the ledger). Per-user 1-row frames.
       val su = e.filter(col("event_type") === "signup")
         .groupBy(col("user_id")).agg(min(col("ts")).as("signup_ts"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val vi = e.filter(col("event_type") === "view")
         .join(broadcast(su), "user_id")
         .filter(col("ts") >= col("signup_ts"))
         .groupBy(col("user_id")).agg(min(col("ts")).as("view_ts"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val pu = e.filter(col("event_type") === "purchase")
         .join(broadcast(vi), "user_id")
         .filter(col("ts") >= col("view_ts"))
@@ -355,14 +356,14 @@ object EventOps {
     "scd2_incremental_merge" -> ((s, dir) => {
       val ev = Tables.events(s, dir).filter(col("user_id") < 20)
         .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val cut = ev.agg(
         expr("(unix_micros(min(ts)) + unix_micros(max(ts))) div 2").as("cut"))
       val evC = ev.crossJoin(broadcast(cut))
       val hist = evC.filter(unix_micros(col("ts")) <= col("cut")).drop("cut")
       val delta = evC.filter(unix_micros(col("ts")) > col("cut")).drop("cut")
       val dim = graft.api.Graft.scd2(hist, "user_id", "ts", "event_id", "event_type")
-        .localCheckpoint(false)
+        .pin(eager = false)
       val deltaKeys = delta.select(col("user_id")).distinct()
       val untouched = dim.join(deltaKeys, Seq("user_id"), "left_anti")
       val affected = dim.join(deltaKeys, Seq("user_id"), "left_semi")
@@ -540,10 +541,10 @@ object EventOps {
         // consumers (register diff + estimate) — un-pinned, every
         // consumer re-sketched the events table (10 scans in the
         // before-plan). Both are |types|×64-row register tables.
-        .localCheckpoint(false)
+        .pin(eager = false)
       val direct = StatSketchOps.hllRegisters(ev, col("event_type"), col("user_id"))
         .select(col("__k").as("event_type"), col("r"), col("m").as("m_d"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val diff = byBatch.join(direct,
           byBatch("event_type") === direct("event_type") &&
           byBatch("r") === direct("r"), "full_outer")
@@ -585,7 +586,7 @@ object EventOps {
       // (VERDICT r15 #2): this is the ENTIRE events table (4 columns)
       // — size-guarded, so at corpus scale the pruned re-scans are
       // kept instead of a non-replicated full-fact pin (guide §5).
-      val ev = graft.api.Graft.pinBounded(Tables.events(s, dir)
+      val ev = graft.api.Pins.bounded(Tables.events(s, dir)
         .withColumn("day", to_date(col("ts")))
         .select(col("user_id"), col("day"), col("event_id"), col("event_type")))
       def side(t: String) = ev.filter(col("event_type") === t)
@@ -886,7 +887,7 @@ object EventOps {
         .select(new graft.functions.CmsAgg(width, depth).toColumn.name("cms"))
       val stats = ev.agg(count(lit(1)).as("total"),
                          countDistinct(col("user_id")).as("n_users"))
-        .localCheckpoint(false) // 1 row, 2 broadcast consumers (r15 opt)
+        .pin(eager = false) // 1 row, 2 broadcast consumers (r15 opt)
       val candidates = ev.distinct()
         .crossJoin(broadcast(cms)).crossJoin(broadcast(stats))
         .filter(graft.functions.CmsFns.estimate("cms", "user_id", width, depth)
@@ -1361,7 +1362,7 @@ object EventOps {
       val ev = Tables.events(s, dir)
       val cohorts = ev.select(col("user_id"), date_trunc("WEEK", col("ts")).as("w"))
         .groupBy(col("user_id")).agg(min(col("w")).as("cohort_week"))
-        .localCheckpoint()
+        .pin(eager = true)
       val sizes = cohorts.groupBy(col("cohort_week"))
         .agg(count(lit(1)).as("n_cohort"))
       val purch = ev.filter(col("event_type") === "purchase")
@@ -1421,7 +1422,7 @@ object EventOps {
             .groupBy(col("sub")).agg(sum(col("nconv")).as("v0")),
           Seq("sub"), "left")
         .select(col("sub"), coalesce(col("v0"), lit(0L)).as("v"))
-        .localCheckpoint() // 8 rows, consumed by three channel scans
+        .pin(eager = true) // 8 rows, consumed by three channel scans
       Seq(("click", 1), ("view", 2), ("signup", 4)).map { case (name, bit) =>
         vs.as("s0").filter(expr(s"(sub & $bit) = 0"))
           .join(vs.as("s1"), expr(s"s1.sub = s0.sub + $bit"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -232,7 +233,7 @@ object GeoOps {
   private def dbscanCountsCore(cand: DataFrame): (DataFrame, DataFrame) = {
     val counts = cand.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_within_r"))
-      .localCheckpoint(false)
+      .pin(eager = false)
     val core = counts.filter(col("n_within_r") >= 2)
       .select(col("user_id").as("core_id"))
     (counts, core)
@@ -273,7 +274,7 @@ object GeoOps {
       cap: Option[Int]): DataFrame = {
     // both the count pass and the border semi join read cand
     val cand = epsilonPairs(pts, pitch, eps2 = 9000000L, cap)
-      .localCheckpoint(false)
+      .pin(eager = false)
     dbscanCensus(pts, cand)
   }
 
@@ -295,7 +296,7 @@ object GeoOps {
   private[graft] def labelFromPoints(pts: DataFrame, pitch: Long,
       cap: Option[Int]): DataFrame = {
     val cand = epsilonPairs(pts, pitch, eps2 = 9000000L, cap)
-      .localCheckpoint(false)
+      .pin(eager = false)
     val (counts, core) = dbscanCountsCore(cand)
     val coreEdges = cand
       .join(core.select(col("core_id").as("user_id")),
@@ -308,7 +309,7 @@ object GeoOps {
       .join(lbl, core("core_id") === lbl("v"), "left")
       .select(col("core_id"),
               coalesce(col("lbl"), col("core_id")).as("cluster"))
-      .localCheckpoint(false) // core output rows + border attach
+      .pin(eager = false) // core output rows + border attach
     val borderLbl = cand
       .join(coreLbl.select(col("core_id").as("nb"), col("cluster")),
             Seq("nb"))
@@ -467,7 +468,7 @@ object GeoOps {
       // pitch-independent point derivation (events scan + distinct +
       // md5) — pin it once for both, as the dense variant already does
       // (size-guarded here because the source is the corpus).
-      val pts = graft.api.Graft.pinBounded(points(s, dir))
+      val pts = graft.api.Pins.bounded(points(s, dir))
       censusAgreementReport(
         censusFromPoints(pts, pitch = 4096L, cap = None),
         censusFromPoints(pts, pitch = 3000L, cap = Some(8)))
@@ -487,7 +488,7 @@ object GeoOps {
     // implements the identical fixture from the same literals.
     "geo_dbscan_census_agreement_dense" -> ((s, dir) => {
       val pts = densePoints(s, dir)
-        .localCheckpoint(false) // feeds both census instantiations
+        .pin(eager = false) // feeds both census instantiations
       censusAgreementReport(
         censusFromPoints(pts, pitch = 4096L, cap = None),
         censusFromPoints(pts, pitch = 3000L, cap = Some(8)))
@@ -552,7 +553,7 @@ object GeoOps {
     "geo_dbscan_label_agreement" -> ((s, dir) => {
       // r16 opt (guide §2.4): same shared-derivation pin as the census
       // agreement — both labelings start from the identical points.
-      val pts = graft.api.Graft.pinBounded(points(s, dir))
+      val pts = graft.api.Pins.bounded(points(s, dir))
       labelAgreementReport(
         labelFromPoints(pts, pitch = 4096L, cap = None),
         labelFromPoints(pts, pitch = 3000L, cap = Some(8)))
@@ -567,7 +568,7 @@ object GeoOps {
     // Verify instead of a constant-1.0 tripwire plus a spec branch.
     "geo_dbscan_label_agreement_dense" -> ((s, dir) => {
       val pts = densePoints(s, dir)
-        .localCheckpoint(false) // feeds both labeling instantiations
+        .pin(eager = false) // feeds both labeling instantiations
       labelAgreementReport(
         labelFromPoints(pts, pitch = 4096L, cap = None),
         labelFromPoints(pts, pitch = 3000L, cap = Some(8)))
@@ -589,7 +590,7 @@ object GeoOps {
       // inside gridKnn, so exchange reuse never dedups the shared point
       // derivation — pin it once for both (size-guarded, same pattern
       // as the dense agreement audit's localCheckpoint).
-      val pts = graft.api.Graft.pinBounded(points(s, dir))
+      val pts = graft.api.Pins.bounded(points(s, dir))
       val un = graft.api.Graft.gridKnn(pts, "user_id", "xi", "yi",
           pitch = 4096L, cap = None)
         .select(col("user_id"), col("dist2").as("d_un"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -85,7 +86,7 @@ object GraphOps {
       // consumer reads it. Same storage class as coPurchasePairs' memo.
       val baskets = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .localCheckpoint(false)
+        .pin(eager = false)
       val nBaskets = baskets.select(col("l_orderkey")).distinct()
         .agg(count(lit(1)).as("n_baskets"))
       val item = baskets.groupBy(col("l_partkey")).agg(count(lit(1)).as("item_n"))
@@ -187,7 +188,7 @@ object GraphOps {
     "graph_modularity" -> ((s, dir) => {
       val e0 = graft.api.Graft.coPurchaseEdges(s, dir, minSupport = 2)
       val adj = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-        .localCheckpoint() // consumed 4×: 2 propagates, degrees, internal
+        .pin(eager = true) // consumed 4×: 2 propagates, degrees, internal
       val labels0 = Tables.part(s, dir)
         .select(col("p_partkey").as("v"), col("p_brand").as("lbl"))
         .join(adj.select(col("a").as("v")).distinct(), "v")
@@ -197,7 +198,7 @@ object GraphOps {
           .groupBy(col("v"))
           .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
           .select(col("v"), col("m.lbl").as("lbl"))
-      val lbl = propagate(propagate(labels0)).localCheckpoint()
+      val lbl = propagate(propagate(labels0)).pin(eager = true)
       val m2row = adj.agg(count(lit(1)).as("m2"))
       val com = adj.groupBy(col("a")).agg(count(lit(1)).as("d"))
         .join(lbl, col("a") === lbl("v"))
@@ -404,7 +405,7 @@ object GraphOps {
           .join(keep.withColumnRenamed("u", "b"), Seq("b"), "left_semi")
           .select(col("a"), col("b"))
       }
-      val rounds = Iterator.iterate(e0)(e => peel(e).localCheckpoint())
+      val rounds = Iterator.iterate(e0)(e => peel(e).pin(eager = true))
         .take(4).toSeq
       rounds.zipWithIndex.map { case (e, i) =>
         val deg = undirected(e).groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -481,13 +482,13 @@ object GraphOps {
       val e = p.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .union(p.select(col("b").as("src"), col("a").as("dst"), col("w")))
       val ow = e.groupBy(col("src")).agg(sum(col("w")).as("ww"))
-      val ep = e.join(ow, "src").localCheckpoint(false)
+      val ep = e.join(ow, "src").pin(eager = false)
       val vs = e.select(col("src").as("v")).distinct()
-        .localCheckpoint(false) // node frame + its count scalar
+        .pin(eager = false) // node frame + its count scalar
       val nodes = vs.crossJoin(broadcast(vs.agg(count(lit(1)).as("n"))))
-        .localCheckpoint(false)
+        .pin(eager = false)
       var rank = nodes.select(col("v"), expr(s"$SCALE div n").as("r"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val rows = (1 to 4).map { t =>
         val contrib = rank.join(ep, rank("v") === ep("src"))
           .groupBy(col("dst")).agg(sum(expr("(r * w) div ww")).as("inr"))
@@ -496,7 +497,7 @@ object GraphOps {
           .select(nodes("v"),
             expr(s"(15 * $SCALE) div (100 * n) + " +
                  "(85 * coalesce(inr, 0)) div 100").as("r"))
-          .localCheckpoint(false) // next round + residual row
+          .pin(eager = false) // next round + residual row
         val row = next.select(col("v"), col("r").as("rn"))
           .join(rank.select(col("v"), col("r").as("rp")), "v")
           .agg(lit(t.toLong).as("round"),
@@ -533,20 +534,19 @@ object GraphOps {
     val e0 = graft.api.Graft.coPurchaseEdges(s, dir, minSupport = 2)
     val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
       .repartition(col("b")) // both rounds join on the neighbor key
-      .localCheckpoint()
-    def pin(df: DataFrame): DataFrame =
-      if (pinned) df.localCheckpoint(false) else df
-    val labels0 = pin(Tables.part(s, dir)
+      .pin(eager = true)
+    val labels0 = Tables.part(s, dir)
       .select(col("p_partkey").as("v"), col("p_brand").as("lbl"))
-      .join(edges.select(col("a").as("v")).distinct(), "v"))
+      .join(edges.select(col("a").as("v")).distinct(), "v")
+      .pin(eager = false, when = pinned)
     def propagate(labels: DataFrame): DataFrame =
       edges.join(labels.withColumnRenamed("v", "b"), "b")
         .groupBy(col("a").as("v"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("v"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl"))).as("m"))
         .select(col("v"), col("m.lbl").as("lbl"))
-    val l1 = pin(propagate(labels0))
-    val l2 = pin(propagate(l1))
+    val l1 = propagate(labels0).pin(eager = false, when = pinned)
+    val l2 = propagate(l1).pin(eager = false, when = pinned)
     (labels0, l1, l2)
   }
 

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -83,7 +84,7 @@ object LayoutOps {
     * read it, so the fact table is scanned once per snapshot side. */
   private def freqTable(df: DataFrame, key: String): DataFrame =
     df.groupBy(col(key).as("k")).agg(count(lit(1)).as("f"))
-      .localCheckpoint(false)
+      .pin(eager = false)
 
   /** One side's snapshot rows: MCV top-8 + (n, d) totals in a single
     * row shape. kind is an EXPLICIT marker, not k IS NULL: a genuine
@@ -650,15 +651,15 @@ object LayoutOps {
       val g0 = docs.groupBy(col("lang"),
           floor(col("n_chars") / 10L).cast("long").as("band"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val g1 = g0.groupBy(col("lang"),
           floor(col("band") / 10L).cast("long").as("band"))
         .agg(sum(col("c")).as("c"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val g2 = g1.groupBy(col("lang"),
           floor(col("band") / 10L).cast("long").as("band"))
         .agg(sum(col("c")).as("c"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val g3 = g2.agg(sum(col("c")).as("c"))
       def rung(lvl: Int, width: Long, grouped: DataFrame): DataFrame =
         grouped.agg(lit(lvl.toLong).as("level"), lit(width).as("band_width"),
@@ -666,7 +667,7 @@ object LayoutOps {
              (min(col("c")) >= 5).cast("long").as("k_ok"))
       val ladder = rung(0, 10L, g0).union(rung(1, 100L, g1))
         .union(rung(2, 1000L, g2)).union(rung(3, 0L, g3))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val minOk = ladder.filter(col("k_ok") === 1)
         .agg(min(col("level")).as("ml"))
       ladder.crossJoin(broadcast(minOk))
@@ -735,9 +736,9 @@ object LayoutOps {
       // union branch replayed the full fact lineage (12 scans → 2).
       // fa/fb are fact-keyed frequency tables → size-guarded; agg is
       // one row.
-      val fa = graft.api.Graft.pinBounded(Tables.events(s, dir)
+      val fa = graft.api.Pins.bounded(Tables.events(s, dir)
         .groupBy(col("user_id").as("k")).agg(count(lit(1)).as("fa")))
-      val fb = graft.api.Graft.pinBounded(Tables.orders(s, dir)
+      val fb = graft.api.Pins.bounded(Tables.orders(s, dir)
         .groupBy(col("o_custkey").as("k")).agg(count(lit(1)).as("fb")))
       val perKey = fa.join(fb, "k")
         .select(col("k"), (col("fa") * col("fb")).as("fab"))
@@ -751,7 +752,7 @@ object LayoutOps {
         sum(col("fab")).as("exact"),
         (sum(col("fab") * col("sampled")) * lit(8L)).as("sampled_est"))
         .crossJoin(broadcast(totals))
-        .localCheckpoint(false)
+        .pin(eager = false)
       agg.select(
           lit("exact").as("method"), col("exact").as("est"), col("exact"))
         .unionByName(agg.select(
@@ -803,11 +804,11 @@ object LayoutOps {
       // VERDICT r15 #2 trio — `ord` is the whole orders projection and
       // fe/fl are fact-keyed frequency tables, so at corpus scale the
       // pruned re-scans are kept instead of non-replicated pins.
-      val fe = graft.api.Graft.pinBounded(Tables.events(s, dir)
+      val fe = graft.api.Pins.bounded(Tables.events(s, dir)
         .groupBy(col("user_id").as("k")).agg(count(lit(1)).as("f")))
-      val fl = graft.api.Graft.pinBounded(Tables.lineitem(s, dir)
+      val fl = graft.api.Pins.bounded(Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey").as("k")).agg(count(lit(1)).as("f")))
-      val ord = graft.api.Graft.pinBounded(
+      val ord = graft.api.Pins.bounded(
         Tables.orders(s, dir).select(col("o_custkey"), col("o_orderkey")))
       def stats(ft: DataFrame): DataFrame =
         ft.agg(sum(col("f")).as("n"), count(lit(1)).as("d"))
@@ -834,7 +835,7 @@ object LayoutOps {
       val so = ord.agg(count(lit(1)).as("n"),
           countDistinct(col("o_custkey")).as("dc"),
           countDistinct(col("o_orderkey")).as("dk"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       // pinned: consumed by its method row AND the rel_err denominator
       val hist = ord
         .join(fe.select(col("k").as("ek"), col("f").as("fe")),
@@ -842,7 +843,7 @@ object LayoutOps {
         .join(fl.select(col("k").as("lk"), col("f").as("fl")),
               col("o_orderkey") === col("lk"))
         .agg(coalesce(sum(col("fe") * col("fl")), lit(0L)).as("est"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val mcvEst = ord
         .join(broadcast(me.select(col("k").as("ek"), col("f").as("fe"))),
               col("o_custkey") === col("ek"), "left")
@@ -885,7 +886,7 @@ object LayoutOps {
     // the statistics closed-form (snapshot content is dir-dependent).
     "layout_stats_snapshot_estimate" -> ((s, dir) => {
       val snap = s.read.parquet(statsSnapshotDir(s, dir))
-        .localCheckpoint(false)
+        .pin(eager = false)
       def mcvOf(side: String, kc: String, fc: String) =
         snap.filter(col("side") === side && col("kind") === "mcv")
           .select(col("k").as(kc), col("f").as(fc))
@@ -944,7 +945,7 @@ object LayoutOps {
     // snapshot read; nothing per-pair, nothing quadratic.
     "layout_stats_staleness" -> ((s, dir) => {
       val snap = s.read.parquet(statsPriorSnapshotDir(s, dir))
-        .localCheckpoint(false)
+        .pin(eager = false)
       stalenessSide(snap, "events_user",
           freqTable(Tables.events(s, dir), "user_id"))
         .unionByName(stalenessSide(snap, "lineitem_ok",
@@ -963,7 +964,7 @@ object LayoutOps {
     // it per family.
     "layout_stats_staleness_docs" -> ((s, dir) => {
       val snap = s.read.parquet(docStatsPriorSnapshotDir(s, dir))
-        .localCheckpoint(false)
+        .pin(eager = false)
       stalenessSide(snap, "documents_srclang",
           freqTable(Tables.documents(s, dir)
             .withColumn("src_lang",

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import graft.api.Graft.topK
+import graft.api.Pins.PinSyntax
 import graft.functions.TextSignatures
 import graft.functions.VectorFns._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -183,7 +184,7 @@ object LexicalOps {
       // build replayed the whole BM25-top-3 + feedback-mining lineage
       // a second time. The pin is |queries|×(feedback vocab) rows and
       // its leaves are session memos (count 0 in the size guard).
-      val fbt = graft.api.Graft.pinBounded(fb.join(post, "doc_id")
+      val fbt = graft.api.Pins.bounded(fb.join(post, "doc_id")
         .groupBy(col("qid"), col("term")).agg(sum(col("tf")).as("tf"))
         .join(qt, Seq("qid", "term"), "left_anti"))
       val n = docLens(s, dir).agg(count(lit(1)).as("n"))
@@ -221,7 +222,7 @@ object LexicalOps {
         // mining lineage — the before-plan held 284 Exchange nodes for a
         // 15-row result. One lazy 3-row checkpoint collapses the second
         // pass to the same ~dozen-exchange shape as the first.
-        .localCheckpoint(false)
+        .pin(eager = false)
       graft.api.Graft.bm25RankFromPostings(
           post, docLens(s, dir), expanded, 5, k1 = K1, b = B)
         .orderBy(col("qid"), col("rank"))

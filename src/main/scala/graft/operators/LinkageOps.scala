@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -114,7 +115,7 @@ object LinkageOps {
       // lineage pin (r11 verdict #6 discipline): the EM consumer reads
       // this ≤8-row table three times — un-pinned, each read re-runs
       // the blocked join
-      .localCheckpoint(false)
+      .pin(eager = false)
   }
 
   /** E-step posterior P(match | pattern) under params (p, m1, u1, m2,
@@ -179,7 +180,7 @@ object LinkageOps {
         // round's delta row) — un-pinned the unroll replays every prior
         // round per consumer (2^rounds growth, 60 Exchange nodes in the
         // before-plan for 4 rounds over an 8-row census).
-        val next = emMStep(withG).localCheckpoint(false)
+        val next = emMStep(withG).pin(eager = false)
         val prevR = prev.select(col("p").as("pp"), col("m1").as("pm1"),
           col("u1").as("pu1"), col("m2").as("pm2"), col("u2").as("pu2"))
         val row = next.crossJoin(broadcast(prevR)).select(
@@ -271,7 +272,7 @@ object LinkageOps {
           col("t_name").as("nm"), col("t_nation").as("nat"),
           col("t_cents").as("cents")))
         // main aggregate + majority rollup both read the union
-        .localCheckpoint(false)
+        .pin(eager = false)
       val majority = nationMajority(stacked)
       stacked.groupBy(col("k"))
         .agg(count(lit(1)).as("n_records"),
@@ -311,8 +312,8 @@ object LinkageOps {
       // customer. Size-guarded (|customers|-row frames — the VERDICT
       // r15 #2 liability class at corpus scale). Scans 6 → 2.
       val (clean0, dirty0) = sides(s, dir)
-      val clean = graft.api.Graft.pinBounded(clean0)
-      val dirty = graft.api.Graft.pinBounded(dirty0)
+      val clean = graft.api.Pins.bounded(clean0)
+      val dirty = graft.api.Pins.bounded(dirty0)
       val ba = clean.groupBy(col("a_seg").as("seg"), col("a_nation").as("nat"))
         .agg(count(lit(1)).as("na"))
       val bb = dirty.groupBy(col("b_seg").as("seg"), col("b_nation").as("nat"))
@@ -363,8 +364,8 @@ object LinkageOps {
       // feeds FIVE passes (truth join, three per-key block counts,
       // totals). Size-guarded like link_blocking_quality above.
       val (clean0, dirty0) = sides(s, dir)
-      val clean = graft.api.Graft.pinBounded(clean0)
-      val dirty = graft.api.Graft.pinBounded(dirty0)
+      val clean = graft.api.Pins.bounded(clean0)
+      val dirty = graft.api.Pins.bounded(dirty0)
       // 1-row scalars pinned: three key rows read each of them
       val truth = clean.join(dirty, col("a_key") === col("b_key"))
         .agg(count(lit(1)).as("n_true"),
@@ -375,10 +376,10 @@ object LinkageOps {
              count(when(col("a_nation") === col("b_nation") &&
                         col("a_bucket") === col("b_bucket"), 1))
                .as("tb_natbuck"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val totals = clean.agg(count(lit(1)).as("n_a"))
         .crossJoin(dirty.agg(count(lit(1)).as("n_b")))
-        .localCheckpoint(false)
+        .pin(eager = false)
       def candCount(aKey: Seq[String], bKey: Seq[String]): DataFrame = {
         val ba = clean.groupBy(aKey.map(col): _*).agg(count(lit(1)).as("na"))
         val bb = dirty.groupBy(bKey.map(col): _*).agg(count(lit(1)).as("nb"))
@@ -418,7 +419,7 @@ object LinkageOps {
       // per-field u-probability passes — un-pinned each re-scanned
       // customer (6 scans in the before-plan). 15k-row narrow frame.
       val (clean0, _) = sides(s, dir)
-      val clean = clean0.localCheckpoint(false)
+      val clean = clean0.pin(eager = false)
 
       // u-probabilities from the clean side's value distributions:
       // P(two random records agree on field f) = Σ_v (n_v / N)².
@@ -468,7 +469,7 @@ object LinkageOps {
         emG(col("p"), col("m1"), col("u1"), col("m2"), col("u2")))
         // PINNED (r15 opt): consumed by p2 AND the report projection —
         // un-pinned, round 1 (p1) replays once per consumer. ≤8 rows.
-        .localCheckpoint(false)
+        .pin(eager = false)
       val p2 = emMStep(withG2).select(
         col("p").as("p2"), col("m1").as("m1f"), col("u1").as("u1f"),
         col("m2").as("m2f"), col("u2").as("u2f"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -138,13 +139,13 @@ object QualityOps {
         Seq("not_null_o_custkey"        -> col("o_custkey").isNull,
             "range_o_totalprice_nonneg" -> (col("o_totalprice") < 0)),
         Seq("pk_unique_o_orderkey"      -> col("o_orderkey")))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val liRules = expectationRules(li, "lineitem",
         Seq("range_l_discount_0_1" ->
               (col("l_discount") < 0 || col("l_discount") > 1),
             "range_l_quantity_pos" -> (col("l_quantity") <= 0),
             "domain_l_returnflag"  -> !col("l_returnflag").isin("A", "N", "R")))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val docRules = expectationRules(Tables.documents(s, dir), "documents",
         Seq("not_blank_text" -> (col("text").isNull || trim(col("text")) === ""),
             "nonneg_n_chars" -> (col("n_chars") < 0)))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,7 +132,7 @@ object RelationalExtOps {
       val p = Tables.part(s, dir).select(col("p_partkey").as("pk"),
         col("p_brand").as("brand"),
         floor(col("p_retailprice") * 100 + 0.5).cast("long").as("cents"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val a = p.withColumn("bkt", expr(s"cents div $delta"))
       val b = p.select(col("pk").as("pk2"), col("brand").as("brand2"),
           col("cents").as("cents2"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Tables
 import graft.api.Graft.{cellProbe, kmAssignTo, kmCentroidsOf, kmSeeds, notSelf, querySet,
   rankBy, scoredPairs, topK}
+import graft.api.Pins.PinSyntax
 import graft.functions.VectorFns._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -154,15 +155,14 @@ object RetrievalOps {
     * pass pinned = true). Mirrors the oracle's ivfKmeansCte a0..a3. */
   private[graft] def ivfLloydChain(c: DataFrame, pinned: Boolean)
       : (Seq[DataFrame], Seq[DataFrame]) = {
-    def pin(df: DataFrame): DataFrame =
-      if (pinned) df.localCheckpoint(false) else df
-    val a0 = pin(c.select(col("vec_id"), pmod(col("vec_id"), lit(8)).as("g")))
+    val a0 = c.select(col("vec_id"), pmod(col("vec_id"), lit(8)).as("g"))
+      .pin(eager = false, when = pinned)
     val c0 = kmCentroidsOf(c, a0)
-    val a1 = pin(kmAssignTo(c, c0))
+    val a1 = kmAssignTo(c, c0).pin(eager = false, when = pinned)
     val c1 = kmCentroidsOf(c, a1)
-    val a2 = pin(kmAssignTo(c, c1))
+    val a2 = kmAssignTo(c, c1).pin(eager = false, when = pinned)
     val c2 = kmCentroidsOf(c, a2)
-    val a3 = pin(kmAssignTo(c, c2))
+    val a3 = kmAssignTo(c, c2).pin(eager = false, when = pinned)
     (Seq(a0, a1, a2, a3), Seq(c0, c1, c2))
   }
 
@@ -256,13 +256,13 @@ object RetrievalOps {
           floor(dot(col("qv"), col("v")) * 1e6 + 0.5).cast("long"), "rel_e6"),
           8, "rel_e6", "vec_id", "rk")
         .select(col("qid"), col("vec_id"), col("v"), col("rel_e6"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val pairs = cand.select(col("qid"), col("vec_id").as("a_id"), col("v").as("va"))
         .join(cand.select(col("qid"), col("vec_id").as("b_id"), col("v").as("vb")), Seq("qid"))
         .filter(col("a_id") =!= col("b_id"))
         .select(col("qid"), col("a_id"), col("b_id"),
                 floor(dot(col("va"), col("vb")) * 1e6 + 0.5).cast("long").as("sim_e6"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       // sim(c, sel): look up the candidate→selected pair similarity
       def simTo(rest: DataFrame, selCol: String, out: String): DataFrame =
         rest.join(
@@ -278,7 +278,7 @@ object RetrievalOps {
           .filter(col("vec_id") =!= col("s1_id")), "s1_id", "sim1")
         .withColumn("mmr10_e6", col("rel_e6") * 7 - col("sim1") * 3)
         // consumed by s2 AND rest3 — pin the ≤|q|·7-row step frame too
-        .localCheckpoint(false)
+        .pin(eager = false)
       val s2 = topK(rest2, 1, "mmr10_e6", "vec_id", "r")
         .select(col("qid"), col("vec_id").as("s2_id"), col("mmr10_e6"))
       val rest3 = simTo(
@@ -452,7 +452,7 @@ object RetrievalOps {
       val adj = graft.api.Graft.memoizedExchange("ann_beam_adjacency", s, dir) {
         // consumed on both self-join sides: materialize once
         val cl = c.join(lists, "vec_id")
-          .select(col("vec_id"), col("v"), col("g")).localCheckpoint()
+          .select(col("vec_id"), col("v"), col("g")).pin(eager = true)
         val adjCell = topK(cl.as("a").join(cl.as("b"),
             col("a.g") === col("b.g") && col("a.vec_id") =!= col("b.vec_id"))
           .select(col("a.vec_id").as("src"), col("b.vec_id").as("dst"),
@@ -494,7 +494,7 @@ object RetrievalOps {
           .distinct()
           .join(c, "vec_id").join(broadcast(q), "qid"), dotE6(col("qv"), col("v")), "s_e6")
           .select(col("bw"), col("qid"), col("vec_id"), col("s_e6"))
-          .localCheckpoint(false)
+          .pin(eager = false)
       def keepW(cand: DataFrame): DataFrame =
         rankBy(cand, "s_e6", "vec_id", "rk", perWidth)
           .filter(col("rk") <= col("bw"))
@@ -584,7 +584,7 @@ object RetrievalOps {
       // checkpoints) plus the final scoring pass — the two memo joins,
       // the 64-dim zip_with subtract and the exchange ran 3× per
       // query. Size-guarded, |corpus| rows.
-      val resid = graft.api.Graft.pinBounded(c.join(lists, "vec_id")
+      val resid = graft.api.Pins.bounded(c.join(lists, "vec_id")
         .join(broadcast(cent1), "g")
         .select(col("vec_id"), col("g").as("g1"),
           zip_with(col("v"), col("cv"), (x, y) => x - y).as("r"))
@@ -634,7 +634,7 @@ object RetrievalOps {
       // checkpoints — separate actions, and exchange reuse never
       // dedups across jobs), so the memo-read + explode + exchange
       // ran 4× per query. Size-guarded, M·|corpus| narrow rows.
-      val sub = graft.api.Graft.pinBounded(
+      val sub = graft.api.Pins.bounded(
         c.select(col("vec_id"), explode(array((0 until M).map(m =>
           struct(lit(m).as("m"), slice(col("v"), m * SUB + 1, SUB).as("sv"))): _*)).as("p"))
         .select(col("vec_id"), col("p.m").as("m"), col("p.sv").as("sv"))
@@ -866,7 +866,7 @@ object RetrievalOps {
       // PINNED (r15 opt, guide §2.4): the labeled corpus feeds the query
       // set AND the scored scan — un-pinned both consumers replayed the
       // corpus⋈labels join (8 ledger scans between the two eval keys).
-      val c = corpus(s, dir).join(lab, "vec_id").localCheckpoint(false)
+      val c = corpus(s, dir).join(lab, "vec_id").pin(eager = false)
       val q = querySet(c, 50, Seq(col("v").as("qv"), col("label").as("actual")))
       val nn = topK(scoredPairs(c, q, dot(col("qv"), col("v"))), 5, "score", "vec_id")
       topK(nn.groupBy(col("qid"), col("actual"), col("label"))
@@ -896,7 +896,7 @@ object RetrievalOps {
       // PINNED (r15 opt, guide §2.4): the labeled corpus feeds the query
       // set AND the scored scan — un-pinned both consumers replayed the
       // corpus⋈labels join (8 ledger scans between the two eval keys).
-      val c = corpus(s, dir).join(lab, "vec_id").localCheckpoint(false)
+      val c = corpus(s, dir).join(lab, "vec_id").pin(eager = false)
       val q = querySet(c, 50, Seq(col("v").as("qv"), col("label").as("actual")))
       val top = topK(scoredPairs(c, q, dot(col("qv"), col("v"))), 10, "score", "vec_id")
         .withColumn("rel", when(col("label") === col("actual"), 1L).otherwise(0L))
@@ -1088,7 +1088,7 @@ object RetrievalOps {
         "AS DOUBLE)))"))
         .withColumn("n2", dot(col("v"), col("v")))
         .withColumn("p2", dot(col("y"), col("y")))
-        .localCheckpoint() // projections + norms materialize pre-join
+        .pin(eager = true) // projections + norms materialize pre-join
       val pairs = proj.as("a").join(proj.as("b"),
           col("a.vec_id") < col("b.vec_id") &&
           pmod(col("a.vec_id") + col("b.vec_id"), lit(23)) === 0)
@@ -1260,7 +1260,7 @@ object RetrievalOps {
         .groupBy(col("label"), col("dim"))
         .agg(count(lit(1)).as("n"), sum(col("q")).as("sd"),
              sum(col("q") * col("q")).as("qq"))
-        .localCheckpoint()
+        .pin(eager = true)
       val tDim = byDim.groupBy(col("dim")).agg(sum(col("sd")).as("td"))
       val perLabel = byDim.join(broadcast(tDim), Seq("dim"))
         .groupBy(col("label"))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,7 +40,7 @@ object StatSketchOps {
     val daily = Tables.events(s, dir)
       .groupBy(col("user_id"), col("event_type"), to_date(col("ts")).as("d"))
       .agg(sum(cents(col("value"))).as("c"))
-      .localCheckpoint(false)
+      .pin(eager = false)
     val d0 = daily.agg(min(col("d")).as("d0"))
     val perUnit = daily.crossJoin(broadcast(d0))
       .withColumn("pre", datediff(col("d"), col("d0")) < 15)
@@ -344,13 +345,13 @@ object StatSketchOps {
       val th = cumHist(tagged.filter(col("half") === 0), col("event_type"), col("v"))
         .groupBy(col("g").as("event_type"))
         .agg(thAggs.head, thAggs.tail: _*)
-        .localCheckpoint(false)
+        .pin(eager = false)
       val binned = tagged.join(broadcast(th), "event_type")
         .withColumn("bin", (1 to 9).map(k =>
           when(col("v") > col(s"t$k"), 1).otherwise(0)).reduce(_ + _))
         .groupBy(col("event_type"), col("half"), col("bin"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val spine = th.select(col("event_type"))
         .crossJoin(broadcast(s.range(0, 10).select(col("id").cast("int").as("bin"))))
       def side(h: Int, out: String) = spine
@@ -628,7 +629,7 @@ object StatSketchOps {
         .agg(sum(cents(col("value"))).as("c"))
         // lineage pin: d0 and the per-user rollup both consume this
         // |users|·|days| digest — un-pinned, each re-scans the corpus
-        .localCheckpoint(false)
+        .pin(eager = false)
       val d0 = daily.agg(min(col("d")).as("d0"))
       val perUser = daily.crossJoin(broadcast(d0))
         .withColumn("pre", datediff(col("d"), col("d0")) < 15)
@@ -976,7 +977,7 @@ object StatSketchOps {
       val cells = Tables.events(s, dir)
         .groupBy(col("event_type"), dayofweek(col("ts")).cast("long").as("dow"))
         .agg(count(lit(1)).as("o"))
-        .localCheckpoint()
+        .pin(eager = true)
       val rowM = cells.groupBy(col("event_type")).agg(sum(col("o")).as("r"))
       val colM = cells.groupBy(col("dow")).agg(sum(col("o")).as("c"))
       val n = cells.agg(sum(col("o")).as("n"),
@@ -1033,7 +1034,7 @@ object StatSketchOps {
       val cnt = Tables.documents(s, dir)
         .groupBy(col("source").as("g"), col("n_chars").as("v"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint() // grid built once, walked twice (vals/tot)
+        .pin(eager = true) // grid built once, walked twice (vals/tot)
       val vals = cnt.select(col("v")).distinct()
       val grps = cnt.groupBy(col("g")).agg(sum(col("c")).as("ng"))
       // single-partition window is bounded: |distinct n_chars| rows
@@ -1080,7 +1081,7 @@ object StatSketchOps {
       val cnt = Tables.documents(s, dir)
         .groupBy(col("source"), col("n_chars").as("v"))
         .agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .pin(eager = true)
       // single-partition window is bounded: |distinct n_chars| rows —
       // the shared midrank grid, a histogram, never the corpus
       val tot = cnt.groupBy(col("v")).agg(sum(col("c")).as("cv"))
@@ -1468,16 +1469,16 @@ object StatSketchOps {
       // aggregate (4 scans total), everything downstream reads ≤20-row
       // checkpoints.
       val tot = docs.agg(count(lit(1)).as("n"), sum(col("len")).as("st"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val obs = docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n1"), sum(col("len")).as("s1"))
         .crossJoin(broadcast(tot))
         .select(col("source"), col("n1").as("n_src"),
           expr("abs(s1 * (n - n1) - (st - s1) * n1)").as("a_obs"),
           expr("n1 * (n - n1)").as("d_obs"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val srcs = docs.groupBy(col("source")).agg(count(lit(1)).as("n1o"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val grid = docs
         .crossJoin(broadcast(srcs.select(col("source").as("src"), col("n1o"))))
         .crossJoin(broadcast(tot))

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -33,7 +34,7 @@ object TextAnalysisOps {
       val docTriArr = Tables.documentsSpread(s, dir) // parallelize trigram compute
         .select(col("doc_id"), col("lang"),
                 graft.functions.TextSignatures.charTrigrams(col("text")).as("tri"))
-        .localCheckpoint(false) // materialize trigram sets once
+        .pin(eager = false) // materialize trigram sets once
       // profiles: top-20 trigrams per language by document frequency,
       // TRAINED ON A DETERMINISTIC 20% HASH-SAMPLE (md5-bps, the
       // sample_stratified primitive): profile training is an aggregate
@@ -305,7 +306,7 @@ object TextAnalysisOps {
       // outgrows a broadcast the same joins degrade to bigram-keyed
       // shuffles of the (doc_id, bigram) stream.
       val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c2"))
-        .localCheckpoint()
+        .pin(eager = true)
       val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
       val vocab = c2.select(col("w1").as("tok"))
         .unionAll(c2.select(col("w2").as("tok")))

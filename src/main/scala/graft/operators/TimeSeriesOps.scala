@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.api.Pins.PinSyntax
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -73,7 +74,7 @@ object TimeSeriesOps {
         .groupBy(to_date(col("ts")).as("day")).agg(count(lit(1)).as("n"))
         .select(datediff(col("day"), lit("1970-01-01").cast("date"))
           .cast("long").as("d"), col("n"))
-        .localCheckpoint()
+        .pin(eager = true)
       val nDays = daily.agg(count(lit(1)).as("n_days"))
       val pairs = daily.alias("a").join(daily.alias("b"), col("b.d") > col("a.d"))
         .select(floor((col("b.n") - col("a.n")) * lit(1000000.0) /
@@ -386,7 +387,7 @@ object TimeSeriesOps {
         .filter(col("event_type").isin("click", "purchase"))
         .groupBy(col("event_type"), expr("CAST(ts AS LONG) div 3600").as("h"))
         .agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
+        .pin(eager = true)
       val x = hc.filter(col("event_type") === "click")
         .select(col("h").as("hx"), col("cnt").as("x"))
       val lags = s.range(-3, 4).toDF("lag")

@@ -331,7 +331,7 @@ object TpchOps {
       // is |suppliers| rows and size-guarded; it also makes the
       // max-equality self-comparison read ONE materialization of the
       // FP revenue sums instead of two independent executions.
-      val rev = graft.api.Graft.pinBounded(
+      val rev = graft.api.Pins.bounded(
         Tables.lineitem(s, dir)
           .filter(col("l_shipdate") >= lit("1997-01-01").cast("timestamp") &&
                   col("l_shipdate") < lit("1997-04-01").cast("timestamp"))
@@ -425,14 +425,14 @@ object TpchOps {
       // bytes — at 100 TB the fact-side aggregate (and the scaled
       // dims) revert to pruned, fault-tolerant re-scans instead of
       // non-replicated localCheckpoint blocks (guide §5).
-      val eurSuppP = graft.api.Graft.pinBounded(eurSupp)
-      val parts = graft.api.Graft.pinBounded(Tables.part(s, dir)
+      val eurSuppP = graft.api.Pins.bounded(eurSupp)
+      val parts = graft.api.Pins.bounded(Tables.part(s, dir)
         .filter(col("p_size") === 15 && col("p_type") === "STANDARD")
         .select(col("p_partkey"), col("p_name")))
       // unit price is an exact IEEE division both engines evaluate
       // identically; min() is order-independent, so the cost equality
       // below is deterministic across engines.
-      val ps = graft.api.Graft.pinBounded(Tables.lineitem(s, dir)
+      val ps = graft.api.Pins.bounded(Tables.lineitem(s, dir)
         .join(broadcast(parts.select(col("p_partkey"))),
               col("l_partkey") === col("p_partkey"))
         .join(broadcast(eurSuppP.select(col("s_suppkey"))),
@@ -518,7 +518,7 @@ object TpchOps {
       // build's separate execution). The pin is |parts| rows and
       // size-guarded: at 100 TB the guard keeps the fault-tolerant
       // re-scan instead.
-      val value = graft.api.Graft.pinBounded(
+      val value = graft.api.Pins.bounded(
         Tables.lineitem(s, dir)
           .join(broadcast(nationSupp), col("l_suppkey") === col("s_suppkey"))
           .groupBy(col("l_partkey"))
@@ -586,7 +586,7 @@ object TpchOps {
       // lineage — the pin (|parts×supps| rows, size-guarded) is what
       // makes the fact pass actually run once for both consumers (the
       // q11/q15 pattern).
-      val perSupp = graft.api.Graft.pinBounded(
+      val perSupp = graft.api.Pins.bounded(
         li97.groupBy(col("l_partkey"), col("l_suppkey"))
           .agg(sum(col("qty_e2")).as("supp_qty")))
       val perPart = perSupp.groupBy(col("l_partkey").as("t_partkey"))

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.api.Graft
+import graft.api.Pins.PinSyntax
 import graft.sources.FileSources.deleteRecursively
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -620,7 +621,7 @@ object StreamingOps {
         q.awaitTermination()
         // The result stays a plan (r8 verdict #4: no .collect() in any
         // registered query path), over checkpointed blocks, not files.
-        s.read.parquet(s"$stateRoot/v$version").localCheckpoint()
+        s.read.parquet(s"$stateRoot/v$version").pin(eager = true)
           .orderBy(col("batch_key"))
       } finally deleteRecursively(stateRoot.toFile)
     }),

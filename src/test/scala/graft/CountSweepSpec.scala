@@ -1,5 +1,7 @@
 package graft
 
+import graft.api.Graft
+
 /** The bench's exact execution shape — `df.count()` — over EVERY
   * registered query. Under `count()` Catalyst prunes all unreferenced
   * aggregate inputs, a shape neither specs (`collect()`, all columns)
@@ -12,16 +14,48 @@ package graft
 class CountSweepSpec extends SparkSpec {
 
   test("every registered query survives count()-pruned execution") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try { fn(spark, sf).count(); None }
-        catch {
-          case e: Throwable =>
-            Some(s"$name: ${e.getClass.getName}: " +
-              Option(e.getMessage).getOrElse("").linesIterator.take(3).mkString(" | "))
-        }
-    }
+    val failures = CountSweep.over(sf).failures
     assert(failures.isEmpty,
       s"${failures.size} queries fail under count():\n${failures.mkString("\n")}")
+  }
+
+  test("the sweep's queries release every pin they make outside a memo build") {
+    val leaked = CountSweep.over(sf).leaked
+    assert(leaked == 0, s"$leaked query-scoped pins outlived their query's release")
+  }
+}
+
+/** One pass over the registry in the suite's session, shared by the
+  * specs that audit it: each query is built (recording the memoized
+  * exchanges the build touches), counted, and then releases its pins,
+  * as Bench and Verify run it. */
+object CountSweep {
+  final case class Result(
+      failures: Seq[String],
+      touchedMemos: Map[String, Seq[String]], // query -> memo labels
+      leaked: Int) // query-scoped pins a release over the whole sweep still frees
+
+  private val results = new java.util.concurrent.ConcurrentHashMap[String, Result]()
+
+  /** The sweep over the tables in `sf`, run once per JVM. */
+  def over(sf: String): Result = results.computeIfAbsent(sf, run)
+
+  private def run(sf: String): Result = {
+    val spark = TestSpark.spark
+    val beforeSweep = Graft.pinSnapshot(spark)
+    val runs = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val before = Graft.pinSnapshot(spark)
+      try {
+        val (df, memos) = Graft.recordTouchedMemos(fn(spark, sf))
+        df.count()
+        (name, None, memos)
+      } catch {
+        case e: Throwable =>
+          (name, Some(s"$name: ${e.getClass.getName}: " +
+            Option(e.getMessage).getOrElse("").linesIterator.take(3).mkString(" | ")), Nil)
+      } finally Graft.releaseQueryPins(spark, before): Unit
+    }
+    Result(runs.flatMap(_._2), runs.map(r => r._1 -> r._3).toMap,
+      Graft.releaseQueryPins(spark, beforeSweep))
   }
 }

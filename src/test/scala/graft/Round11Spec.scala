@@ -219,10 +219,11 @@ class Round11Spec extends SparkSpec {
     // Cross-query memoization exists to AMORTIZE: a memo with one
     // consumer is storage pinned for nothing — unless it exists to cut
     // lineage (the ann_beam 516-exchange fix), which is the one
-    // defended exception class. The census reads the committed round
-    // ledger (via_memo attribution), so a future single-consumer memo
-    // fails here with its label named instead of silently pinning
-    // blocks.
+    // defended exception class. The census reads the memo labels each
+    // registered query's build touches in the suite's own count()
+    // sweep (the ledger's via_memo attribution, taken at this tree), so
+    // a new single-consumer memo fails here with its label named
+    // instead of silently pinning blocks.
     // Allowlisted single-consumer memos, each with its defense on
     // record (r11 verdict #8 — don't re-litigate):
     //  - ann_beam_adjacency: its build self-joins the cell table on
@@ -234,24 +235,13 @@ class Round11Spec extends SparkSpec {
     //    (RetrievalOps.scala:493) — same double-consumption shape one
     //    level down.
     val lineageCutMemos = Set("ann_beam_adjacency", "ann_beam_medoids")
-    // audit the LATEST committed round ledger, not a hardcoded round —
-    // a future round's new single-consumer memo must fail here without
-    // anyone remembering to bump a filename
-    val ledgers = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-      .toArray.map(_.toString)
-      .filter(_.matches(""".*PLAN_LEDGER_r\d+\.json"""))
-    assert(ledgers.nonEmpty, "no committed PLAN_LEDGER_r*.json found")
-    val latest = ledgers.maxBy(p =>
-      """r(\d+)\.json""".r.findFirstMatchIn(p).get.group(1).toInt)
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(latest)),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val memoLabels = """"memo:([a-zA-Z0-9_.]+)":""".r
-      .findAllMatchIn(src).map(_.group(1)).toSet
-    assert(memoLabels.nonEmpty, "ledger must carry memo fingerprint rows")
-    val consumed = """"via_memo":"([a-zA-Z0-9_.,]+)"""".r
-      .findAllMatchIn(src).flatMap(_.group(1).split(',')).toSeq
+    val consumed = CountSweep.over(sf).touchedMemos.values.flatten.toSeq
     val counts = consumed.groupBy(identity).view.mapValues(_.size).toMap
+    // the fingerprinted memos of the registry's queries (specs that
+    // build memos of their own under other labels are not audited)
+    val memoLabels = api.Graft.memoFingerprintsFor(sf).map(_._1).toSet
+      .filter(counts.contains)
+    assert(memoLabels.nonEmpty, "the sweep must build memo fingerprints")
     memoLabels.foreach { m =>
       val n = counts.getOrElse(m, 0)
       assert(n >= 2 || lineageCutMemos.contains(m),

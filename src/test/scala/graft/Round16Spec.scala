@@ -1,5 +1,10 @@
 package graft
 
+import graft.api.{Graft, Pins}
+import graft.api.Pins.PinSyntax
+import java.util.concurrent.CountDownLatch
+import java.util.concurrent.TimeUnit.SECONDS
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -23,32 +28,32 @@ class Round16Spec extends SparkSpec {
 
   test("inputFileBytes sums the parquet leaves, not join-product estimates") {
     val part = Tables.part(spark, sf)
-    val solo = graft.api.Graft.inputFileBytes(part)
+    val solo = Pins.inputFileBytes(part)
     assert(solo > 0L, "a parquet-backed frame must report its file bytes")
     // a self-join would send stats.sizeInBytes into product territory;
     // the leaf sum just doubles
     val joined = part.as("a").join(part.as("b"), "p_partkey")
-    assert(graft.api.Graft.inputFileBytes(joined) == 2 * solo)
+    assert(Pins.inputFileBytes(joined) == 2 * solo)
     // an already-checkpointed leaf counts 0 (bounded-by-contract input)
     val pinned = part.limit(5).localCheckpoint()
-    assert(graft.api.Graft.inputFileBytes(pinned) == 0L)
+    assert(Pins.inputFileBytes(pinned) == 0L)
     pinned.unpersist(): Unit
   }
 
   test("pinBounded pins under the bound, refuses above it, off at 0") {
     val frame = Tables.part(spark, sf).select(col("p_partkey"), col("p_size"))
     // default bound (4 GiB) >> sf0.001 input: pinned
-    assert(isPinned(graft.api.Graft.pinBounded(frame)),
+    assert(isPinned(Pins.bounded(frame)),
       "sub-bound frame must localCheckpoint")
     // 1-byte bound: the corpus-scale branch — frame returned UNPINNED,
     // keeping pruned fault-tolerant re-scans
     withPinBound("1") {
-      assert(!isPinned(graft.api.Graft.pinBounded(frame)),
+      assert(!isPinned(Pins.bounded(frame)),
         "above-bound frame must keep its scan lineage")
     }
     // 0 disables pinning outright (the session-conf opt-out)
     withPinBound("0") {
-      assert(!isPinned(graft.api.Graft.pinBounded(frame)))
+      assert(!isPinned(Pins.bounded(frame)))
     }
   }
 
@@ -75,7 +80,7 @@ class Round16Spec extends SparkSpec {
     assert(memoRdds.nonEmpty)
     val before = graft.api.Graft.pinSnapshot(spark)
     // a per-query pin: lazy checkpoint materialized by an action
-    val pinned = Tables.part(spark, sf).select(col("p_partkey")).localCheckpoint(false)
+    val pinned = Tables.part(spark, sf).select(col("p_partkey")).pin(eager = false)
     assert(pinned.count() > 0)
     assert(graft.api.Graft.pinSnapshot(spark).size > before.size)
     val freed = graft.api.Graft.releaseQueryPins(spark, before)
@@ -96,5 +101,100 @@ class Round16Spec extends SparkSpec {
     graft.api.Graft.releaseQueryPins(spark, before): Unit
     // memo blocks survive: a re-read must not throw missing-block
     assert(m.limit(1).count() == 1)
+  }
+
+  // ---- pins of concurrent queries ----------------------------------
+
+  private def partKeys: DataFrame = Tables.part(spark, sf).select(col("p_partkey"))
+
+  private def rddId(pinned: DataFrame): Int =
+    pinned.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }.get
+
+  /** Runs `body` on a new thread; the result joins it and rethrows
+    * what it threw. */
+  private def spawn(body: => Unit): () => Unit = {
+    @volatile var failure: Option[Throwable] = None
+    val t = new Thread(() => try body catch { case e: Throwable => failure = Some(e) })
+    t.start()
+    () => {
+      t.join(SECONDS.toMillis(180))
+      assert(!t.isAlive, "thread did not finish")
+      failure.foreach(throw _)
+    }
+  }
+
+  test("a query's release leaves another query's live pin readable") {
+    val aSnapped, bCounted, aReleased = new CountDownLatch(1)
+    val joinA = spawn {
+      val before = Graft.pinSnapshot(spark)
+      aSnapped.countDown()
+      assert(bCounted.await(60, SECONDS))
+      Graft.releaseQueryPins(spark, before): Unit
+      aReleased.countDown()
+    }
+    @volatile var counts = (0L, 0L)
+    val joinB = spawn {
+      assert(aSnapped.await(60, SECONDS))
+      val before = Graft.pinSnapshot(spark)
+      val pinned = partKeys.pin(eager = false)
+      val first = pinned.count()
+      bCounted.countDown()
+      assert(aReleased.await(60, SECONDS))
+      counts = (first, pinned.count())
+      Graft.releaseQueryPins(spark, before): Unit
+    }
+    joinA()
+    joinB()
+    assert(counts._1 > 0 && counts._2 == counts._1, counts)
+  }
+
+  test("a pin made while another thread builds a memo is freed by its own release") {
+    val joinBuild = spawn {
+      Graft.memoizedExchange("r16_concurrent_build", spark, sf) {
+        spark.range(1, 2, 1, 1).select(udf((x: Long) => PinGate.pass(x)).apply(col("id")).as("id"))
+      }: Unit
+    }
+    // the build's checkpoint job is running: pin, then let the build end
+    assert(PinGate.entered.await(60, SECONDS))
+    val before = Graft.pinSnapshot(spark)
+    val pinned = partKeys.pin(eager = false)
+    assert(pinned.count() > 0)
+    PinGate.release.countDown()
+    joinBuild()
+    assert(Graft.releaseQueryPins(spark, before) >= 1)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(rddId(pinned)),
+      "the pin outlived its query's release")
+  }
+
+  test("a pin made on a thread the query started is freed by the query's release") {
+    @volatile var result = (0, -1)
+    val joinQuery = spawn {
+      val before = Graft.pinSnapshot(spark)
+      @volatile var id = -1
+      val joinChild = spawn {
+        val pinned = partKeys.pin(eager = false)
+        assert(pinned.count() > 0)
+        id = rddId(pinned)
+      }
+      joinChild()
+      result = (Graft.releaseQueryPins(spark, before), id)
+    }
+    joinQuery()
+    val (freed, id) = result
+    assert(freed >= 1 && id >= 0, result)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id),
+      "the helper thread's pin outlived the query's release")
+  }
+}
+
+/** Holds a memo build's checkpoint job inside its one task until
+  * released. An object, so the task reaches it without a copy. */
+object PinGate {
+  val entered = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  def pass(x: Long): Long = {
+    entered.countDown()
+    release.await(60, SECONDS)
+    x
   }
 }
